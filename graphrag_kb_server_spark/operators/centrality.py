@@ -18,8 +18,13 @@ O(V·E) and driver-bound — impossible at 10^12 docs. We provide:
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..session import collect_if_small
 
 
 def degree_centrality(
@@ -93,11 +98,12 @@ def degree_centrality(
 
 
 def _betweenness_driver(
-    spark, sym_pdf, num_sources: int | None, seed: int, max_depth: int,
+    spark, pdf, num_sources: int | None, seed: int, max_depth: int,
     name_dt,
 ) -> DataFrame:
-    """Driver-side twin of the batched-BFS Brandes rounds for small
-    graphs: same seeded md5 source draw, same ≤max_depth level
+    """Driver-side twin of the batched-BFS Brandes rounds over the
+    collected raw (a, b) edges: same symmetrized, deduplicated
+    adjacency, same seeded md5 source draw, same ≤max_depth level
     truncation, same dependency rule delta(v) += σ(v)/σ(w)·(1+delta(w))
     over (level d → d−1) adjacencies, same undirected /2 halving.
     σ values are integer-valued path counts (exact in doubles); the
@@ -108,10 +114,10 @@ def _betweenness_driver(
     import hashlib
     from collections import defaultdict
 
-    from pyspark.sql import types as T
-
+    sym = pd.concat([pdf, pdf.rename(columns={"a": "b", "b": "a"})])
+    sym = sym.drop_duplicates()
     adj: dict = defaultdict(list)
-    for a, b in zip(sym_pdf["a"], sym_pdf["b"]):
+    for a, b in zip(sym["a"], sym["b"]):
         adj[a].append(b)
     nodes = sorted(adj)
     if num_sources is None:
@@ -179,9 +185,29 @@ def approx_betweenness(
     num_sources: int | None = 16,
     seed: int = 42,
     max_depth: int = 12,
-    small_graph_threshold: int = 200_000,
 ) -> DataFrame:
     """Sampled-source betweenness over the undirected graph.
+
+    Small graphs with string ids (``collect_if_small``; the md5 source
+    draw must hash the same bytes on both paths) run the identical
+    batched-BFS rules driver-side; the rest take
+    ``approx_betweenness_distributed``.
+    """
+    e = edges.select(F.col("src").alias("a"), F.col("tgt").alias("b"))
+    if e.schema["a"].dataType.simpleString() == "string":
+        pdf = collect_if_small(e)
+        if pdf is not None:
+            return _betweenness_driver(
+                edges.sparkSession, pdf, num_sources, seed, max_depth,
+                e.schema["a"].dataType,
+            )
+    return approx_betweenness_distributed(edges, num_sources, seed, max_depth)
+
+
+def approx_betweenness_distributed(
+    edges: DataFrame, num_sources: int | None = 16, seed: int = 42, max_depth: int = 12
+) -> DataFrame:
+    """The distributed rounds of ``approx_betweenness``.
 
     Driver-side per-source accumulation is avoided: each wave is a
     DataFrame of (source, node, dist, sigma) frontier rows for ALL
@@ -198,26 +224,6 @@ def approx_betweenness(
     e = edges.select(F.col("src").alias("a"), F.col("tgt").alias("b"))
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     sym = sym.localCheckpoint(eager=False)
-
-    # Size-adaptive execution (the LPA/components/pagerank pattern):
-    # each distributed BFS level is 2 joins + an aggregation and the
-    # backward pass 3 joins per level — ~40 shuffle stages of
-    # scheduling for a graph whose Brandes rounds take milliseconds
-    # in-process. At or below the threshold the identical batched-BFS
-    # rules run driver-side over one Arrow collect (string ids only —
-    # the md5 source draw must hash the same bytes);
-    # tests/test_r06_driver_parity.py pins driver == distributed.
-    # 0 forces the distributed rounds.
-    if (
-        small_graph_threshold > 0
-        and sym.schema["a"].dataType.simpleString() == "string"
-    ):
-        pdf = sym.limit(small_graph_threshold + 1).toPandas()
-        if len(pdf) <= small_graph_threshold:
-            return _betweenness_driver(
-                edges.sparkSession, pdf, num_sources, seed, max_depth,
-                sym.schema["a"].dataType,
-            )
 
     nodes = sym.select(F.col("a").alias("name")).distinct()
 
@@ -355,7 +361,6 @@ def pagerank(
     damping: float = 0.85,
     iterations: int = 20,
     weight: str | None = None,
-    driver_edge_threshold: int = 200_000,
 ) -> DataFrame:
     """Directed PageRank (Page et al. 1999) with uniform teleport and
     dangling-mass redistribution — the web-graph companion to the
@@ -365,38 +370,61 @@ def pagerank(
     ``nodes`` (optional, one ``name`` column) pins the vertex set so
     isolated pages keep their teleport share; default = distinct edge
     endpoints. ``weight`` makes contributions proportional to edge
-    weight instead of 1/out_degree.
+    weight instead of 1/out_degree. Sources whose total edge weight is
+    0 count as dangling.
 
     Returns ``(name, rank)`` with ``sum(rank) = 1``; fixed iteration
     count for determinism (20 ≈ the classic convergence budget at
     d = 0.85).
 
+    Small edge sets (``collect_if_small`` over the raw edges) run the
+    same update rule driver-side on float64 — summation order differs
+    by at most the usual 1e-15 float reassociation; larger ones take
+    ``pagerank_distributed``.
+    """
+    e = _weighted_edges(edges, src, dst, weight)
+    e_pd = collect_if_small(e)
+    if e_pd is None:
+        return pagerank_distributed(
+            edges, nodes, src, dst, damping, iterations, weight
+        )
+    if nodes is None:
+        name_field = T.StructField("name", e.schema["_s"].dataType)
+        names = pd.unique(pd.concat([e_pd["_s"], e_pd["_t"]])).tolist()
+    else:
+        name_field = nodes.schema["name"]
+        names = nodes.select("name").distinct().toPandas()["name"].tolist()
+    return _pagerank_driver(
+        edges.sparkSession, name_field, names, e_pd, damping, iterations
+    )
+
+
+def _weighted_edges(
+    edges: DataFrame, src: str, dst: str, weight: str | None
+) -> DataFrame:
+    w = F.col(weight).cast("double") if weight is not None else F.lit(1.0)
+    return edges.select(
+        F.col(src).alias("_s"), F.col(dst).alias("_t"), w.alias("_w")
+    )
+
+
+def pagerank_distributed(
+    edges: DataFrame, nodes: DataFrame | None = None, src: str = "src",
+    dst: str = "tgt", damping: float = 0.85, iterations: int = 20,
+    weight: str | None = None,
+) -> DataFrame:
+    """The distributed rounds of ``pagerank``, same contract.
+
     Shape at 100 TB: per iteration ONE shuffle — the contribution sum
     keyed on the destination (partial-aggregated; a 10^9-in-degree hub
     combines map-side). The rank⋈edges join keys both sides on the
-    SOURCE (ranks re-partition once; edges stay put via the eager
+    SOURCE (ranks re-partition once; edges stay put via the
     checkpoint), the dangling mass is a 1-ROW aggregate broadcast back
     in (no per-round driver collect), and lazy localCheckpoints keep
     the logical plan linear with one driver action per
     ``_PR_STRIDE`` rounds — the betweenness/LPA schedule.
-
-    Size-adaptive (the LPA/components guard): at or below
-    ``driver_edge_threshold`` normalized edges the graph is per-round-
-    scheduling-bound, so the iteration runs driver-side over one Arrow
-    collect — the SAME update rule on float64, summation order differs
-    by at most the usual 1e-15 float reassociation (callers round
-    ranks for comparison anyway). Set the threshold to 0 to force the
-    distributed rounds (kept continuously oracled by
-    ``g1_pagerank_distributed``).
     """
-    w = (
-        F.col(weight).cast("double")
-        if weight is not None
-        else F.lit(1.0)
-    )
-    e = edges.select(
-        F.col(src).alias("_s"), F.col(dst).alias("_t"), w.alias("_w")
-    )
+    e = _weighted_edges(edges, src, dst, weight)
     if nodes is None:
         all_nodes = (
             e.select(F.col("_s").alias("name"))
@@ -408,38 +436,18 @@ def pagerank(
     # out-normalized edges: contribution fraction per (src, dst).
     # Sources whose total edge weight is 0 are excluded HERE so they
     # fall into the dangling anti-join below instead of producing
-    # NULL/NaN fractions that silently destroy rank mass (ADVICE r5).
+    # NULL/NaN fractions that silently destroy rank mass.
     out_tot = e.groupBy("_s").agg(F.sum("_w").alias("_tot")).where(
         F.col("_tot") != 0
     )
-    # LAZY checkpoints: the counts just below are the first actions and
-    # materialize them — eager=True here would pay two extra driver
-    # jobs for the same materialization
+    # LAZY checkpoints: the count and the dangling checkpoint just
+    # below are the first actions and materialize them
     frac = (
         e.join(out_tot, "_s")
         .select("_s", "_t", (F.col("_w") / F.col("_tot")).alias("_f"))
         .localCheckpoint(eager=False)
     )
     all_nodes = all_nodes.localCheckpoint(eager=False)
-    # single limit-probe collect decides the execution path: a
-    # complete bounded collect of frac IS the driver path's edge
-    # input, so the previous separate frac.count() job disappears;
-    # the driver path derives its own dangling mask from it (has_out),
-    # so the dangling frame below is only built for the distributed
-    # rounds
-    if driver_edge_threshold > 0:
-        frac_pd = frac.limit(driver_edge_threshold + 1).toPandas()
-        if len(frac_pd) <= driver_edge_threshold:
-            nodes_pd = all_nodes.toPandas()
-            n = len(nodes_pd)
-            if n == 0:
-                return all_nodes.select(
-                    F.col("name"), F.lit(0.0).alias("rank")
-                )
-            return _pagerank_driver(
-                edges.sparkSession, all_nodes, nodes_pd, frac_pd,
-                damping, iterations, n,
-            )
     n = all_nodes.count()
     if n == 0:
         return all_nodes.select(
@@ -493,24 +501,27 @@ def pagerank(
 
 
 def _pagerank_driver(
-    spark, all_nodes: DataFrame, nodes_pd, e_pd,
-    damping: float, iterations: int, n: int,
+    spark, name_field, names: list, e_pd, damping: float, iterations: int,
 ) -> DataFrame:
-    """Collected power iteration for sub-threshold graphs — same
-    update rule as the distributed rounds, numpy scatter-add instead
-    of a shuffle. Takes the already-collected nodes/frac pandas frames
-    (the caller's limit-probe collect); preserves the caller's name
-    dtype by building the result on the nodes frame's own schema."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    names = nodes_pd["name"].tolist()
+    """Collected power iteration — same update rule as the distributed
+    rounds, numpy scatter-add instead of a shuffle. Derives the
+    out-normalized fractions and the dangling mask (no out-edge, or a
+    zero total weight) from the raw (_s, _t, _w) edges in-process;
+    keeps the caller's name dtype via ``name_field``."""
+    n = len(names)
+    schema = T.StructType([name_field, T.StructField("rank", T.DoubleType(), False)])
+    if n == 0:
+        return spark.createDataFrame([], schema)
+    # the distributed join drops NULL-source and zero-total rows, and
+    # its sum skips NULL contributions
+    tot = e_pd.groupby("_s")["_w"].transform("sum")
+    e_pd = e_pd.assign(_f=e_pd["_w"] / tot)[tot.notna() & (tot != 0)]
     idx = {v: i for i, v in enumerate(names)}
     s = np.fromiter((idx[v] for v in e_pd["_s"].tolist()), dtype=np.int64,
                     count=len(e_pd))
     t = np.fromiter((idx[v] for v in e_pd["_t"].tolist()), dtype=np.int64,
                     count=len(e_pd))
-    f = e_pd["_f"].to_numpy(dtype=np.float64)
+    f = e_pd["_f"].fillna(0.0).to_numpy(dtype=np.float64)
     has_out = np.zeros(n, dtype=bool)
     has_out[s] = True
     ranks = np.full(n, 1.0 / n, dtype=np.float64)
@@ -520,11 +531,6 @@ def _pagerank_driver(
         contrib = np.zeros(n, dtype=np.float64)
         np.add.at(contrib, t, ranks[s] * f)
         ranks = base + damping * (contrib + dm / n)
-    nodes_pd = nodes_pd.assign(rank=ranks)
-    schema = T.StructType(
-        list(all_nodes.schema.fields)
-        + [T.StructField("rank", T.DoubleType(), False)]
-    )
-    return spark.createDataFrame(nodes_pd, schema=schema).orderBy(
-        F.desc("rank"), "name"
-    )
+    return spark.createDataFrame(
+        pd.DataFrame({"name": names, "rank": ranks}), schema
+    ).orderBy(F.desc("rank"), "name")

@@ -22,9 +22,13 @@ iteration count bounds termination (LPA oscillation guard).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..session import collect_if_small
 from .components import connected_components
 
 
@@ -85,6 +89,14 @@ def _edge_frames(
     return e, sym
 
 
+def _collect_small_string_edges(e: DataFrame):
+    """``collect_if_small`` of the half-size (a, b, w) frame, for string
+    ids only: the md5 parity must hash the same bytes on both paths."""
+    if e.schema["a"].dataType.simpleString() != "string":
+        return None
+    return collect_if_small(e)
+
+
 def _lpa_parity(node_col) -> F.Column:
     """Deterministic node parity in [0, LPA_STRIDE): first 8 hex chars
     of md5, mod stride (DuckDB-mirrorable, unlike xxhash64)."""
@@ -94,13 +106,10 @@ def _lpa_parity(node_col) -> F.Column:
     )
 
 
-def _node_parities(names) -> "np.ndarray":
+def _node_parities(names) -> np.ndarray:
     """md5-parity per node name — the same bytes both execution paths
-    hash (numpy import deferred; names is a sorted numpy object
-    array)."""
+    hash (names is a sorted numpy object array)."""
     import hashlib
-
-    import numpy as np
 
     return np.fromiter(
         (
@@ -131,8 +140,6 @@ def _label_propagation_driver(
     same b-ascending addition order the dict loop used via its sorted
     adjacency lists, so even fractional weight sums come out to the
     identical float."""
-    import numpy as np
-
     half_a = pdf["a"].to_numpy()
     half_b = pdf["b"].to_numpy()
     half_w = pdf["w"].to_numpy(dtype=np.float64)
@@ -194,18 +201,9 @@ def _label_propagation_driver(
         if changed == 0:
             break
     dt = sym_schema["a"].dataType
-    from pyspark.sql import types as T
-
-    import pandas as pd
-
-    out_pdf = pd.DataFrame(
-        {"node": names, "label": names[labels]}
-    )
     return spark.createDataFrame(
-        out_pdf,
-        T.StructType(
-            [T.StructField("node", dt), T.StructField("label", dt)]
-        ),
+        pd.DataFrame({"node": names, "label": names[labels]}),
+        T.StructType([T.StructField("node", dt), T.StructField("label", dt)]),
     )
 
 
@@ -215,7 +213,6 @@ def label_propagation(
     dst: str = "tgt",
     weight: str | None = "weight",
     max_iterations: int = 12,
-    small_graph_threshold: int = 600_000,
 ) -> DataFrame:
     """edges → (node, label): SEMI-synchronous weighted LPA,
     deterministic.
@@ -237,45 +234,35 @@ def label_propagation(
     change-flag column is OR-accumulated through the group, so "no node
     changed across a full sweep" — a true global fixpoint of the
     semi-sync rule — is what terminates the loop.
+
+    Small string-id graphs (``_collect_small_string_edges``) run the
+    identical rounds driver-side; the rest take
+    ``label_propagation_distributed``.
     """
-    # the voter's parity class is computed ONCE here and stored in the
+    e, sym = _edge_frames(edges, src, dst, weight)
+    pdf = _collect_small_string_edges(e)
+    if pdf is None:
+        return label_propagation_distributed(
+            edges, src, dst, weight, max_iterations
+        )
+    return _label_propagation_driver(
+        e.sparkSession, pdf, sym.schema, max_iterations
+    )
+
+
+def label_propagation_distributed(
+    edges: DataFrame, src: str = "src", dst: str = "tgt",
+    weight: str | None = "weight", max_iterations: int = 12,
+) -> DataFrame:
+    """The distributed parity-class rounds of ``label_propagation``,
+    same contract."""
+    # the voter's parity class is computed ONCE and stored in the
     # checkpoint: the per-round active-class filter is then an int
     # comparison over checkpointed rows instead of md5+conv re-evaluated
     # on every edge every round (VERDICT r4 item 3). _edge_frames memo:
     # a following modularity_refine over the SAME edges frame reuses
     # this materialization.
     e, sym = _edge_frames(edges, src, dst, weight)
-
-    # Size-adaptive execution (same rationale as connected_components):
-    # a distributed iterative loop over a bounded graph pays seconds of
-    # per-round scheduling for microseconds of work. Below the
-    # threshold the EXACT same semi-synchronous rounds run as a driver
-    # loop over the collected edges — identical deterministic output,
-    # one collect instead of 3*k rounds of shuffles. String ids only
-    # (the md5 parity must hash the same bytes both paths); larger or
-    # non-string graphs stay distributed.
-    #
-    # Threshold sizing: 600k sym rows = 300k undirected edges ≈ 30 MB
-    # collected — trivially driver-safe. Clustering runs over the KG
-    # *entity* graph (the LCC, post entity-merge), which is orders of
-    # magnitude smaller than the corpus: 100 TB of pages distills to
-    # ~1e7-1e8 entities, so the distributed path still carries real
-    # workloads while everything dominated by per-round scheduling
-    # overhead (the whole sub-cluster recursion included) stays local.
-    # g2_lpa_distributed forces small_graph_threshold=0 and is
-    # hash-oracled equal — both paths stay continuously witnessed.
-    # gate on the HALF-size e frame (sym has exactly 2x its rows) via a
-    # single limit-probe collect: if the bounded collect comes back
-    # complete it IS the driver path's input — no separate count() job,
-    # and sym's union+parity pass never materializes on this branch
-    if sym.schema["a"].dataType.simpleString() == "string":
-        half_cap = small_graph_threshold // 2
-        probe = e.limit(half_cap + 1).toPandas()
-        if len(probe) <= half_cap:
-            return _label_propagation_driver(
-                e.sparkSession, probe, sym.schema, max_iterations
-            )
-
     labels = sym.select(F.col("a").alias("node")).distinct().withColumn(
         "label", F.col("node")
     ).localCheckpoint(eager=True)
@@ -670,8 +657,6 @@ def _refine_driver(
     weights may flip exact-ΔQ ties — the same disclaimer the
     distributed-path contract already carries. Takes the collected
     sym/labels pandas frames; returns a sorted (node, label) list."""
-    import numpy as np
-
     av = spdf["a"].to_numpy()
     bv = spdf["b"].to_numpy()
     wv = spdf["w"].to_numpy(dtype=np.float64)
@@ -828,7 +813,6 @@ def modularity_refine(
     outer_rounds: int = 2,
     max_merge_passes: int = 8,
     local_rounds: int = 6,
-    small_graph_threshold: int = 600_000,
 ) -> DataFrame:
     """Louvain-style refinement of an LPA partition → (node, label).
 
@@ -857,14 +841,45 @@ def modularity_refine(
     Scale: both moves run on aggregates of the COARSE graph (tot per
     community, wc per node×neighbor-community) — partial-aggregated
     shuffles keyed by community/node, never all-pairs. Merges touch
-    only communities that share an edge. Same size-adaptive execution
-    as LPA: below ``small_graph_threshold`` sym rows the identical
-    rules run as a driver loop (string ids only — parity hashes the
-    same bytes); above, everything stays distributed. With
-    integer-valued weights both paths are bit-identical (all sums are
-    exact in doubles); fractional weights may flip exact-ΔQ ties
-    between paths — both results remain valid local optima.
+    only communities that share an edge. Same dispatch as LPA: small
+    string-id graphs run the identical rules as a driver loop, the rest
+    ``modularity_refine_distributed``. With integer-valued weights both
+    paths are bit-identical (all sums are exact in doubles); fractional
+    weights may flip exact-ΔQ ties between paths — both results remain
+    valid local optima.
     """
+    e, _ = _edge_frames(edges, src, dst, weight)
+    half = _collect_small_string_edges(e)
+    if half is None:
+        return modularity_refine_distributed(
+            edges, labels, src, dst, weight,
+            outer_rounds, max_merge_passes, local_rounds,
+        )
+    # m from the collected half-size frame (exact for the integer-valued
+    # weights the bit-parity contract covers)
+    m = float(half["w"].to_numpy(dtype="float64").sum())
+    if m <= 0:
+        return labels
+    spdf = pd.concat(
+        [half, half.rename(columns={"a": "b", "b": "a"})], ignore_index=True
+    )
+    lpdf = labels.select("node", "label").toPandas()
+    out = _refine_driver(
+        spdf, lpdf, m, outer_rounds, max_merge_passes, local_rounds,
+    )
+    dt = labels.schema["node"].dataType
+    return labels.sparkSession.createDataFrame(
+        pd.DataFrame(out, columns=["node", "label"]),
+        T.StructType([T.StructField("node", dt), T.StructField("label", dt)]),
+    )
+
+
+def modularity_refine_distributed(
+    edges: DataFrame, labels: DataFrame, src: str = "src", dst: str = "tgt",
+    weight: str | None = "weight", outer_rounds: int = 2,
+    max_merge_passes: int = 8, local_rounds: int = 6,
+) -> DataFrame:
+    """The distributed rounds of ``modularity_refine``, same contract."""
     # e is re-joined against the labels on EVERY merge pass (up to
     # outer_rounds*max_merge_passes times) — checkpointed once so the
     # caller's upstream edges plan (a whole KG build, in the bench's
@@ -872,47 +887,6 @@ def modularity_refine(
     # memo, an LPA→refine composition over the same edges frame shares
     # ONE materialization of that upstream plan.
     e, sym = _edge_frames(edges, src, dst, weight)
-    # The gate is a single limit-probe collect of the HALF-size e
-    # frame (sym has exactly 2x its rows): a complete bounded collect
-    # IS the driver path's input, and m derives from it in-process
-    # (exact for the integer-valued weights the bit-parity contract
-    # covers — summation order is free for exact doubles). sym and
-    # the stats aggregation only exist for the distributed rounds.
-    half = None
-    if sym.schema["a"].dataType.simpleString() == "string":
-        half_cap = small_graph_threshold // 2
-        half = e.limit(half_cap + 1).toPandas()
-        if len(half) > half_cap:
-            half = None
-    if half is not None:
-        m = float(half["w"].to_numpy(dtype="float64").sum())
-        if m <= 0:
-            return labels
-        from pyspark.sql import types as T
-
-        import pandas as pd
-
-        spdf = pd.DataFrame(
-            {
-                "a": pd.concat([half["a"], half["b"]], ignore_index=True),
-                "b": pd.concat([half["b"], half["a"]], ignore_index=True),
-                "w": pd.concat([half["w"], half["w"]], ignore_index=True),
-            }
-        )
-        lpdf = labels.select("node", "label").toPandas()
-        out = _refine_driver(
-            spdf, lpdf, m, outer_rounds, max_merge_passes, local_rounds,
-        )
-        import pandas as pd
-
-        dt = labels.schema["node"].dataType
-        return labels.sparkSession.createDataFrame(
-            pd.DataFrame(out, columns=["node", "label"]),
-            T.StructType(
-                [T.StructField("node", dt), T.StructField("label", dt)]
-            ),
-        )
-
     stats = e.agg(
         F.count(F.lit(1)).alias("n"), F.sum("w").alias("w")
     ).first()

@@ -5,10 +5,11 @@ Reference semantics: ``nx.connected_components`` sorted by size
 also the LCC step inside clustering at lightrag_clustering.py:236-247).
 networkx is driver-bound; at web scale two formulations are provided:
 
-- ``connected_components`` — min-label propagation with pointer
-  jumping folded into each round (O(log d) rounds on diameter d).
-  The default: entity-linking similarity graphs are short-diameter,
-  and each round is one join + one agg + one self-join.
+- ``connected_components_minlabel`` — min-label propagation with
+  pointer jumping folded into each round (O(log d) rounds on diameter
+  d), the large-input side of ``connected_components``: entity-linking
+  similarity graphs are short-diameter, and each round is one join +
+  one agg + one self-join.
 - ``connected_components_star`` — the alternating large-star/
   small-star algorithm (Kiveris et al., "Connected Components in
   MapReduce and Beyond", SoCC'14), converging in O(log² n) rounds
@@ -33,8 +34,12 @@ Implementation notes for Spark:
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..session import collect_if_small
 
 
 def connected_components(
@@ -42,7 +47,6 @@ def connected_components(
     src: str = "src",
     dst: str = "tgt",
     max_iterations: int = 50,
-    small_graph_threshold: int = 100_000,
 ) -> DataFrame:
     """edges(src, tgt) → (node STRING, component STRING).
 
@@ -50,19 +54,55 @@ def connected_components(
     nodes only appear if present as self-edges or in the node set of
     ``edges``; callers union in singletons if needed.
 
-    Size-adaptive execution: a distributed iterative join over a graph
-    of a few thousand edges pays seconds of per-round scheduling for
-    microseconds of work, so when the (deduped, symmetrized) edge set
-    is ≤ ``small_graph_threshold`` rows the exact same min-label
-    semantics run as driver-side union-find on the collected edges —
-    identical output, one collect instead of rounds of shuffles. The
-    threshold bounds the collect (100k string pairs ≈ a few MB); larger
-    graphs take the distributed min-label + pointer-jumping loop.
-    Entity-similarity graphs from linking are far below the threshold
-    even at web scale corpora (they grow with the VOCABULARY of
-    near-identical names, not the corpus) while true web-scale graphs
-    (g3 over billions of rows) stay distributed.
+    Small edge sets (``collect_if_small``) run the same min-label
+    semantics as driver-side union-find; larger ones take
+    ``connected_components_minlabel``.
     """
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
+        F.col("a").isNotNull() & F.col("b").isNotNull()
+    )
+    pdf = collect_if_small(e)
+    if pdf is None:
+        return connected_components_minlabel(edges, src, dst, max_iterations)
+    # .tolist(): plain python str/int values, so min semantics and
+    # createDataFrame typing match the distributed path exactly (numpy
+    # scalars never reach the union-find)
+    comp = min_label_components(list(zip(pdf["a"].tolist(), pdf["b"].tolist())))
+    labels = sorted(comp)
+    # preserve the caller's id type: numeric ids must keep numeric min
+    # semantics end-to-end (a string cast would reorder "9" > "10")
+    dt = e.schema["a"].dataType
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"node": labels, "component": [comp[n] for n in labels]}),
+        T.StructType([T.StructField("node", dt), T.StructField("component", dt)]),
+    )
+
+
+def min_label_components(pairs: list) -> dict:
+    """node → component (its min member) by driver-side union-find over
+    (a, b) pairs: the min-label rounds' semantics, in process."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.get(x, x) != x:
+            parent[x] = parent.get(parent[x], parent[x])
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by min keeps component id = min member
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {n: find(n) for p in pairs for n in p}
+
+
+def connected_components_minlabel(
+    edges: DataFrame, src: str = "src", dst: str = "tgt", max_iterations: int = 50
+) -> DataFrame:
+    """The distributed rounds of ``connected_components``: min-label
+    propagation with pointer jumping, same output contract."""
     # symmetrize once; dedup to keep the iteration input minimal
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -70,46 +110,6 @@ def connected_components(
     )
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
     sym = sym.localCheckpoint(eager=True)
-
-    if sym.count() <= small_graph_threshold:
-        parent: dict = {}
-
-        def find(x):
-            while parent.get(x, x) != x:
-                parent[x] = parent.get(parent[x], parent[x])
-                x = parent[x]
-            return x
-
-        # Arrow collect + .tolist(): plain python str/int values, so
-        # min semantics and createDataFrame typing match the legacy
-        # Row path exactly (numpy scalars never reach the union-find)
-        pdf = sym.select("a", "b").toPandas()
-        pairs = list(zip(pdf["a"].tolist(), pdf["b"].tolist()))
-        for a, b in pairs:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by min keeps component id = min member
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        labels = sorted({a for a, _ in pairs})
-        # preserve the caller's id type: numeric ids must keep numeric
-        # min semantics end-to-end (a string cast would reorder "9" >
-        # "10" and change every downstream min/join)
-        from pyspark.sql import types as T
-
-        dt = sym.schema["a"].dataType
-        import pandas as pd
-
-        # Arrow path for the return frame — the pickled-rows path costs
-        # ~1s at 100k rows, the Arrow batch is near-free
-        return sym.sparkSession.createDataFrame(
-            pd.DataFrame(
-                {"node": labels, "component": [find(n) for n in labels]}
-            ),
-            T.StructType(
-                [T.StructField("node", dt), T.StructField("component", dt)]
-            ),
-        )
 
     # label(node) = min neighbor-or-self, iterated to fixpoint.
     # This is the simple "min-label propagation" formulation: each round

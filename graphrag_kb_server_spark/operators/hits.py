@@ -18,16 +18,22 @@ Spark shape — each half-step is ONE key-partitioned aggregation:
   keep the logical plan linear, one driver action per stride (the
   pagerank/LPA schedule).
 
-Size-adaptive like pagerank: at or below ``driver_edge_threshold``
-normalized edges the rounds are scheduling-bound and run driver-side
-over one Arrow collect — same float64 update rule; callers compare on
-6-dp-rounded scores where summation-order ULPs vanish.
+Small edge sets (``collect_if_small``) run the same float64 update
+rule driver-side; callers compare on 6-dp-rounded scores where
+summation-order ULPs vanish. ``hits_distributed`` is the large-input
+side.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..session import collect_if_small
+from .centrality import _weighted_edges
 
 
 def hits(
@@ -36,26 +42,29 @@ def hits(
     dst: str = "tgt",
     weight: str | None = None,
     iterations: int = 20,
-    driver_edge_threshold: int = 200_000,
 ) -> DataFrame:
     """Returns ``(name, hub, authority)`` for every edge endpoint,
     L2-normalized per vector and rounded to 6 dp, sorted by authority
     desc. Fixed iteration count for determinism."""
-    w = (
-        F.col(weight).cast("double") if weight is not None else F.lit(1.0)
-    )
-    e = edges.select(
-        F.col(src).alias("_s"), F.col(dst).alias("_t"), w.alias("_w")
-    ).localCheckpoint(eager=True)
+    e = _weighted_edges(edges, src, dst, weight)
+    epd = collect_if_small(e)
+    if epd is None:
+        return hits_distributed(edges, src, dst, weight, iterations)
+    return _hits_driver(edges.sparkSession, e.schema["_s"].dataType, epd, iterations)
+
+
+def hits_distributed(
+    edges: DataFrame, src: str = "src", dst: str = "tgt",
+    weight: str | None = None, iterations: int = 20,
+) -> DataFrame:
+    """The distributed rounds of ``hits``, same contract."""
+    e = _weighted_edges(edges, src, dst, weight).localCheckpoint(eager=True)
     all_nodes = (
         e.select(F.col("_s").alias("name"))
         .unionByName(e.select(F.col("_t").alias("name")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-
-    if e.count() <= driver_edge_threshold:
-        return _hits_driver(edges.sparkSession, all_nodes, e, iterations)
 
     scores = all_nodes.select(
         "name", F.lit(1.0).alias("hub"), F.lit(1.0).alias("authority")
@@ -109,22 +118,15 @@ def hits(
     ).orderBy(F.desc("authority"), "name")
 
 
-def _hits_driver(
-    spark, all_nodes: DataFrame, e: DataFrame, iterations: int
-) -> DataFrame:
-    """Same update rule over one Arrow collect — scheduling-bound small
-    graphs (the pagerank/LPA guard). Preserves the caller's name dtype
-    via the nodes frame's own schema."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    nodes_pd = all_nodes.toPandas().sort_values("name").reset_index(drop=True)
-    ix = {v: i for i, v in enumerate(nodes_pd["name"])}
-    epd = e.toPandas()
-    s = np.fromiter((ix[v] for v in epd["_s"]), dtype=np.int64,
-                    count=len(epd))
-    t = np.fromiter((ix[v] for v in epd["_t"]), dtype=np.int64,
-                    count=len(epd))
+def _hits_driver(spark, name_dt, epd, iterations: int) -> DataFrame:
+    """Same update rule over the collected raw (_s, _t, _w) edges;
+    keeps the caller's name dtype."""
+    names, st = np.unique(
+        np.concatenate([epd["_s"].to_numpy(), epd["_t"].to_numpy()]),
+        return_inverse=True,
+    )
+    s, t = st[: len(epd)], st[len(epd):]
+    nodes_pd = pd.DataFrame({"name": names})
     w = epd["_w"].to_numpy(dtype=np.float64)
     n = len(nodes_pd)
     hub = np.ones(n)
@@ -150,8 +152,8 @@ def _hits_driver(
     nodes_pd["hub"] = [_r6(v) for v in hub]
     nodes_pd["authority"] = [_r6(v) for v in auth]
     schema = T.StructType(
-        list(all_nodes.schema.fields)
-        + [
+        [
+            T.StructField("name", name_dt),
             T.StructField("hub", T.DoubleType(), False),
             T.StructField("authority", T.DoubleType(), False),
         ]

@@ -36,13 +36,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import GRAPH_FIELD_SEP
 from ..functions import hashing as H
 from ..functions import text as TXT
 from ..functions import vectors as V
 from ..functions.embedding import embed_udf
-from .components import connected_components
+from ..session import collect_if_small
+from .components import connected_components, min_label_components
 from .dedup import oversized_bucket_stats, split_oversized_buckets
 
 DEFAULT_THRESHOLD = 0.80
@@ -274,22 +276,9 @@ def _canonical_map_driver(names_list: list, threshold: float,
                 if exp != nm:
                     linked.append((nm, exp))
 
-    parent: dict = {}
-
-    def find(x):
-        while parent.get(x, x) != x:
-            parent[x] = parent.get(parent[x], parent[x])
-            x = parent[x]
-        return x
-
-    for a, b in linked:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo
     comps: dict = defaultdict(list)
-    for nm in {n for p in linked for n in p}:
-        comps[find(nm)].append(nm)
+    for nm, c in min_label_components(linked).items():
+        comps[c].append(nm)
     canon: dict = {}
     for members in comps.values():
         rep = min(members, key=lambda n: (-len(n), n))
@@ -303,45 +292,43 @@ def canonical_map(
     name_col: str = "name",
     threshold: float = DEFAULT_THRESHOLD,
     include_abbreviations: bool = True,
-    small_vocab_threshold: int = 100_000,
 ) -> DataFrame:
     """nodes → (name, canonical_name) for EVERY input name (identity
     rows included), via LSH → cosine → components.
 
-    Size-adaptive (the LPA/components/pagerank pattern): linking runs
-    over DISTINCT names — a vocabulary, orders of magnitude smaller
-    than the corpus — and the distributed composition pays ~10 stages
-    of scheduling for microseconds of work on small vocabularies. At
-    or below ``small_vocab_threshold`` distinct printable-ASCII names
-    the identical pipeline runs driver-side (_canonical_map_driver,
-    bit-identical by construction; tests pin driver == distributed).
-    Larger or non-ASCII vocabularies take the distributed operators;
-    0 forces distributed."""
-    names = nodes.select(F.col(name_col).alias("name")).distinct()
-    if small_vocab_threshold > 0:
-        probe = names.limit(small_vocab_threshold + 1).toPandas()
-        if len(probe) <= small_vocab_threshold:
-            names_list = probe["name"].tolist()
-            if all(
-                isinstance(nm, str)
-                and all(32 <= ord(c) < 127 for c in nm)
-                for nm in names_list
-            ):
-                from pyspark.sql import types as T
+    Small printable-ASCII vocabularies (``collect_if_small``; the
+    ASCII gate keeps lower()/\\s+ semantics identical to the JVM) run
+    the identical pipeline driver-side (``_canonical_map_driver``,
+    bit-identical by construction); the rest take
+    ``canonical_map_distributed``."""
+    raw = nodes.select(F.col(name_col).alias("name"))
+    probe = collect_if_small(raw)
+    if probe is not None:
+        names_list = list(dict.fromkeys(probe["name"].tolist()))
+        if all(
+            isinstance(nm, str) and all(32 <= ord(c) < 127 for c in nm)
+            for nm in names_list
+        ):
+            dt = raw.schema["name"].dataType
+            schema = T.StructType(
+                [T.StructField("name", dt), T.StructField("canonical_name", dt)]
+            )
+            return nodes.sparkSession.createDataFrame(
+                _canonical_map_driver(names_list, threshold, include_abbreviations),
+                schema,
+            )
+    return canonical_map_distributed(
+        nodes, name_col, threshold, include_abbreviations
+    )
 
-                out = _canonical_map_driver(
-                    names_list, threshold, include_abbreviations
-                )
-                dt = names.schema["name"].dataType
-                return nodes.sparkSession.createDataFrame(
-                    out,
-                    T.StructType(
-                        [
-                            T.StructField("name", dt),
-                            T.StructField("canonical_name", dt),
-                        ]
-                    ),
-                )
+
+def canonical_map_distributed(
+    nodes: DataFrame, name_col: str = "name",
+    threshold: float = DEFAULT_THRESHOLD, include_abbreviations: bool = True,
+) -> DataFrame:
+    """The distributed operator composition of ``canonical_map``, same
+    contract."""
+    names = nodes.select(F.col(name_col).alias("name")).distinct()
     pairs = score_pairs(candidate_pairs(names), names, threshold=threshold).select(
         "name_a", "name_b"
     )

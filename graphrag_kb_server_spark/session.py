@@ -11,7 +11,53 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+#: the one driver/distributed crossover, in rows (see collect_if_small)
+DRIVER_MAX_ROWS = 200_000
+
+#: ObjectHashAggregate (collect_set/collect_list aggs) falls back to
+#: sort-based aggregation after only 128 in-memory groups per partition
+#: by default; every KG merge partition holds 10k+ groups of small
+#: bounded state, so the fallback's per-partition sort is pure overhead
+#: (~8% on the edge merge, measured). Every collect aggregate in this
+#: engine is order-free, so the aggregation mode cannot affect results.
+OBJ_AGG_FALLBACK_THRESHOLD = 1 << 20
+
+
+def collect_if_small(df: DataFrame, max_rows: int = DRIVER_MAX_ROWS):
+    """The engine's one size policy: ``df`` as a pandas frame when it has
+    at most ``max_rows`` rows, else ``None`` — one ``limit(max_rows + 1)``
+    collect decides and fetches at once, with no separate count job.
+
+    The graph and linking operators (components, betweenness, pagerank,
+    HITS, LPA, modularity refinement, canonical_map) each pair an
+    in-process numpy/Python twin with distributed rounds. Iterative
+    rounds over a bounded input pay seconds of job and shuffle
+    scheduling for microseconds of work, so below the cap one collect
+    plus the twin wins; 200k rows of an edge or name projection is tens
+    of MB on the driver, while web-scale graphs stay distributed. KG
+    entity graphs and linking vocabularies grow with the vocabulary,
+    not the corpus, so they usually fit. Callers probe their raw input
+    projection before building any checkpointed or derived frame, so a
+    complete result IS the twin's input; each twin's distributed
+    sibling is called directly by tests and oracles."""
+    pdf = df.limit(max_rows + 1).toPandas()
+    return pdf if len(pdf) <= max_rows else None
+
+
+def _default_driver_mem() -> str:
+    """About 60% of MemAvailable, capped at 16g: the heap is pre-sized
+    (Xms = Xmx below), so it must fit the host it starts on."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemAvailable:"):
+                    mb = int(line.split()[1]) * 6 // 10 // 1024
+                    return f"{max(512, min(mb, 16 * 1024))}m"
+    except OSError:
+        pass
+    return "4g"
 
 
 def get_spark(
@@ -23,6 +69,8 @@ def get_spark(
     """Build (or reuse) a SparkSession.
 
     cpus: local parallelism (defaults to $SPARK_GRAFT_CPUS or '*').
+    Driver heap: $SPARK_GRAFT_DRIVER_MEM, else ~60% of the host's
+    available memory, capped at 16g.
     shuffle_partitions: defaults to cpus (local rule-of-thumb: ~cores,
     not the 200 default which over-parallelizes small local runs and
     under-parallelizes cluster runs; on a real cluster this is set to
@@ -33,6 +81,7 @@ def get_spark(
         cpus = int(cpus_env) if cpus_env.isdigit() else 0
     master = f"local[{cpus}]" if cpus else "local[*]"
     n_shuffle = shuffle_partitions or (cpus if cpus else 32)
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
 
     builder = (
         SparkSession.builder.master(master)
@@ -46,30 +95,18 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # keep Arrow batches big enough to amortize Python worker startup
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         # Xms = Xmx: G1 commit/uncommit churn on a growing heap causes
         # madvise/TLB-shootdown storms (observed 89% system time with 32
-        # runnable executor threads on this 32-vCPU VM) — a fixed-size
+        # runnable executor threads on a 32-vCPU VM) — a fixed-size
         # heap eliminates it
-        .config(
-            "spark.driver.defaultJavaOptions",
-            "-Xms" + os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-        )
+        .config("spark.driver.defaultJavaOptions", "-Xms" + driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # ObjectHashAggregate (collect_set/collect_list aggs) falls back
-        # to sort-based aggregation after only 128 in-memory groups per
-        # partition by default; every KG merge partition holds 10k+
-        # groups of small bounded state (capped sorted sets), so the
-        # fallback's per-partition sort is pure overhead (~8% on the
-        # edge merge, measured). Raised default, env-overridable for
-        # memory-constrained deployments; every collect aggregate in
-        # this engine is order-free (array_sort/array_min-wrapped), so
-        # the aggregation mode cannot affect results.
         .config(
             "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-            os.environ.get("SPARK_GRAFT_OBJ_AGG_FALLBACK", str(1 << 20)),
+            str(OBJ_AGG_FALLBACK_THRESHOLD),
         )
     )
     if extra_conf:

@@ -15,6 +15,7 @@ from graphrag_kb_server_spark.operators.communities import (
 from graphrag_kb_server_spark.operators.components import (
     component_sizes,
     connected_components,
+    connected_components_minlabel,
     connected_components_star,
 )
 from graphrag_kb_server_spark.operators.walks import (
@@ -64,7 +65,7 @@ def test_connected_components_small_graph_path_agrees(spark):
     fast = {(r["node"], r["component"])
             for r in connected_components(e).collect()}
     dist = {(r["node"], r["component"])
-            for r in connected_components(e, small_graph_threshold=0).collect()}
+            for r in connected_components_minlabel(e).collect()}
     assert fast == dist
 
 
@@ -247,14 +248,14 @@ def test_hits_ranking_and_paths_agree(spark):
     """Kleinberg sanity on a hand graph (h1 links both authorities →
     top hub; a1 has two in-links → top authority) and the forced-
     distributed rounds must equal the driver path exactly at 6 dp."""
-    from graphrag_kb_server_spark.operators.hits import hits
+    from graphrag_kb_server_spark.operators.hits import hits, hits_distributed
 
     edges = spark.createDataFrame(
         [("h1", "a1", 1.0), ("h1", "a2", 1.0), ("h2", "a1", 1.0)],
         "src string, tgt string, w double",
     )
     drv = hits(edges, weight="w", iterations=5)
-    dist = hits(edges, weight="w", iterations=5, driver_edge_threshold=0)
+    dist = hits_distributed(edges, weight="w", iterations=5)
     d = {r.name: (r.hub, r.authority) for r in drv.collect()}
     x = {r.name: (r.hub, r.authority) for r in dist.collect()}
     assert d == x

@@ -1,12 +1,14 @@
-"""Round-6 optimization parity pins: every size-adaptive driver path
-added/vectorized this round must be bit-identical to its distributed
-(or pre-existing) twin on graphs that exercise the tie-break rules.
+"""Driver-twin parity pins: every size-dispatched operator's driver
+path must match its distributed sibling on graphs that exercise the
+tie-break rules, and the one size policy (collect_if_small) must cut
+exactly at its cap.
 
-- canonical_map: new driver path (LSH → cosine → components in-process)
-  vs the distributed operator composition (small_vocab_threshold=0).
+- canonical_map: driver path (LSH → cosine → components in-process)
+  vs canonical_map_distributed.
 - label_propagation / modularity_refine: numpy-vectorized driver loops
-  vs the distributed rounds (small_graph_threshold=0) — integer weights
-  (the documented bit-parity contract).
+  vs the *_distributed rounds — integer weights (the documented
+  bit-parity contract).
+- pagerank: driver power iteration vs pagerank_distributed at 1e-12.
 """
 
 from __future__ import annotations
@@ -25,7 +27,10 @@ def spark():
 
 
 def test_canonical_map_driver_matches_distributed(spark):
-    from graphrag_kb_server_spark.operators.linking import canonical_map
+    from graphrag_kb_server_spark.operators.linking import (
+        canonical_map,
+        canonical_map_distributed,
+    )
 
     names = [
         # similar-name cluster (shared 3-grams, cosine >= 0.8)
@@ -46,7 +51,7 @@ def test_canonical_map_driver_matches_distributed(spark):
     )
     dist = sorted(
         (r["name"], r["canonical_name"])
-        for r in canonical_map(nodes, small_vocab_threshold=0).collect()
+        for r in canonical_map_distributed(nodes).collect()
     )
     assert drv == dist
     # sanity: the abbreviation collapses onto the expansion
@@ -55,7 +60,10 @@ def test_canonical_map_driver_matches_distributed(spark):
 
 
 def test_canonical_map_driver_skips_non_ascii(spark):
-    from graphrag_kb_server_spark.operators.linking import canonical_map
+    from graphrag_kb_server_spark.operators.linking import (
+        canonical_map,
+        canonical_map_distributed,
+    )
 
     nodes = spark.createDataFrame(
         [("Café",), ("Cafe",), ("Plain",)], "name string"
@@ -68,7 +76,7 @@ def test_canonical_map_driver_skips_non_ascii(spark):
     )
     dist = sorted(
         (r["name"], r["canonical_name"])
-        for r in canonical_map(nodes, small_vocab_threshold=0).collect()
+        for r in canonical_map_distributed(nodes).collect()
     )
     assert drv == dist
 
@@ -90,6 +98,7 @@ def _random_edges(seed: int, n_nodes: int = 40, n_edges: int = 90):
 def test_lpa_vectorized_driver_matches_distributed(spark, seed):
     from graphrag_kb_server_spark.operators.communities import (
         label_propagation,
+        label_propagation_distributed,
     )
 
     edf = spark.createDataFrame(
@@ -101,9 +110,7 @@ def test_lpa_vectorized_driver_matches_distributed(spark, seed):
     )
     dist = sorted(
         (r["node"], r["label"])
-        for r in label_propagation(
-            edf, max_iterations=6, small_graph_threshold=0
-        ).collect()
+        for r in label_propagation_distributed(edf, max_iterations=6).collect()
     )
     assert drv == dist
 
@@ -113,6 +120,7 @@ def test_refine_vectorized_driver_matches_distributed(spark, seed):
     from graphrag_kb_server_spark.operators.communities import (
         label_propagation,
         modularity_refine,
+        modularity_refine_distributed,
     )
 
     edf = spark.createDataFrame(
@@ -126,9 +134,7 @@ def test_refine_vectorized_driver_matches_distributed(spark, seed):
     )
     dist = sorted(
         (r["node"], r["label"])
-        for r in modularity_refine(
-            edf, lab, small_graph_threshold=0, **kw
-        ).collect()
+        for r in modularity_refine_distributed(edf, lab, **kw).collect()
     )
     assert drv == dist
 
@@ -137,6 +143,7 @@ def test_refine_vectorized_driver_matches_distributed(spark, seed):
 def test_betweenness_driver_matches_distributed(spark, num_sources):
     from graphrag_kb_server_spark.operators.centrality import (
         approx_betweenness,
+        approx_betweenness_distributed,
     )
 
     edf = spark.createDataFrame(
@@ -149,11 +156,53 @@ def test_betweenness_driver_matches_distributed(spark, num_sources):
     }
     dist = {
         r["name"]: round(r["centrality"], 4)
-        for r in approx_betweenness(
-            edf, num_sources=num_sources, small_graph_threshold=0
+        for r in approx_betweenness_distributed(
+            edf, num_sources=num_sources
         ).collect()
     }
     assert drv == dist
+
+
+def test_collect_if_small_cuts_exactly_at_max_rows(spark):
+    from graphrag_kb_server_spark.session import collect_if_small
+
+    fits = collect_if_small(spark.range(5), max_rows=5)
+    assert fits is not None and sorted(fits["id"]) == [0, 1, 2, 3, 4]
+    assert collect_if_small(spark.range(6), max_rows=5) is None
+    assert len(collect_if_small(spark.range(0), max_rows=0)) == 0
+
+
+@pytest.mark.parametrize("with_nodes", [True, False])
+def test_pagerank_driver_matches_distributed(spark, with_nodes):
+    from graphrag_kb_server_spark.operators.centrality import (
+        pagerank,
+        pagerank_distributed,
+    )
+
+    rnd = random.Random(11)
+    rows = [
+        (a, b, rnd.randint(1, 9) / 4.0)
+        for a, b, _ in _random_edges(11, n_nodes=20, n_edges=50)
+    ]
+    # a source whose out-weights sum to 0 must count as dangling
+    rows += [("z", "n1", 0.0), ("z", "n2", 0.0)]
+    edf = spark.createDataFrame(rows, "src string, tgt string, w double")
+    names = {a for a, _, _ in rows} | {b for _, b, _ in rows}
+    nodes = None
+    if with_nodes:
+        names.add("isolated")
+        nodes = spark.createDataFrame([(n,) for n in names], "name string")
+    drv = {
+        r["name"]: r["rank"]
+        for r in pagerank(edf, nodes=nodes, weight="w").collect()
+    }
+    dist = {
+        r["name"]: r["rank"]
+        for r in pagerank_distributed(edf, nodes=nodes, weight="w").collect()
+    }
+    assert drv.keys() == dist.keys() == names
+    assert all(abs(drv[n] - dist[n]) <= 1e-12 for n in names)
+    assert abs(sum(drv.values()) - 1.0) < 1e-9
 
 
 def test_kmeans_empty_input_raises(spark):

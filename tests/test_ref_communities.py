@@ -112,10 +112,13 @@ def test_semi_sync_lpa_modularity_within_bound_of_leiden(spark):
 
 
 def test_distributed_rounds_match_driver_loop(spark):
-    """The size-adaptive guard must be a pure execution-strategy choice:
-    forcing the distributed path (threshold 0) yields the exact same
-    labeling as the driver loop."""
-    from graphrag_kb_server_spark.operators.communities import label_propagation
+    """The size dispatch must be a pure execution-strategy choice: the
+    distributed rounds yield the exact same labeling as the driver
+    loop."""
+    from graphrag_kb_server_spark.operators.communities import (
+        label_propagation,
+        label_propagation_distributed,
+    )
 
     edges = _onepoint_edges()[:200]
     edf = spark.createDataFrame(edges, "src string, tgt string, weight double")
@@ -125,7 +128,7 @@ def test_distributed_rounds_match_driver_loop(spark):
     }
     dist = {
         (r["node"], r["label"])
-        for r in label_propagation(edf, small_graph_threshold=0).collect()
+        for r in label_propagation_distributed(edf).collect()
     }
     assert drv == dist
 
@@ -164,12 +167,13 @@ def test_modularity_refine_closes_gap_to_leiden(spark):
 
 
 def test_refine_distributed_matches_driver_loop(spark):
-    """modularity_refine's size-adaptive guard must be a pure
+    """modularity_refine's size dispatch must be a pure
     execution-strategy choice: same labeling either way (integer
     weights → bit-identical ΔQ on both paths)."""
     from graphrag_kb_server_spark.operators.communities import (
         label_propagation,
         modularity_refine,
+        modularity_refine_distributed,
     )
     from graphrag_kb_server_spark.golden import golden_refine_graph_edges
 
@@ -183,9 +187,7 @@ def test_refine_distributed_matches_driver_loop(spark):
     }
     dist = {
         (r["node"], r["label"])
-        for r in modularity_refine(
-            edf, lab, small_graph_threshold=0, **kw
-        ).collect()
+        for r in modularity_refine_distributed(edf, lab, **kw).collect()
     }
     assert drv == dist
 
