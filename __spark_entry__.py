@@ -952,10 +952,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         import tempfile
 
         g, query = _kg_query_inputs(spark)
-        res = answer_query(
-            spark, g, query, QueryParams(mode="hybrid", top_k=10),
-            cache_path=tempfile.mkdtemp(prefix="kg_answer_oracle_"),
-        )
+        with tempfile.TemporaryDirectory(prefix="kg_answer_oracle_") as cache_path:
+            res = answer_query(
+                spark, g, query, QueryParams(mode="hybrid", top_k=10),
+                cache_path=cache_path,
+            )
         rows = [("answer", 0, res["answer"])]
         for r in res["references"]:
             rows.append(("reference", r["reference_id"], r["file_path"]))

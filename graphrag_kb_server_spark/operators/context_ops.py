@@ -12,15 +12,24 @@
 - Q21 <SEP> file-reference expansion (:1791-1817).
 - Q17 LLM-response cache: ``llm_cache(args_hash, content)`` keyed by a
   deterministic hash of (mode, query, params) — ``compute_args_hash``
-  analogue (:499-513); the cache IS a table (determinism fixture).
+  analogue (:499-513); the cache IS a table (determinism fixture): a
+  parquet append log on a single-writer local path, read and written
+  with pyarrow on the driver, compacted with a crash-safe swap.
 """
 
 from __future__ import annotations
 
+import datetime
 import hashlib
 import json
-from collections import OrderedDict
+import os
+import shutil
+import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -203,50 +212,33 @@ class LlmCache:
     """The llm_cache table: parquet-backed KV of args_hash → content.
 
     Stays a *table* (not an in-process dict) because it is the
-    determinism fixture the reference relies on (kv_store_llm_response_cache).
-    Writes are append + last-write-wins on read (max by written_at).
+    determinism fixture the reference relies on (kv_store_llm_response_cache):
+    a parquet directory of ``part-*`` files in ``SCHEMA`` that Spark
+    or any other parquet reader can read. Every op is driver-side
+    pyarrow I/O on that directory, not a Spark job. Writes are append +
+    last-write-wins on read (newest ``written_at``; ties go to the
+    greater content, so every read and every compaction agree).
 
-    Small-file hygiene: each ``put`` appends one tiny file, so once the
-    directory holds ``compact_every`` part-files ``put`` folds it back
-    into a single last-write-wins file (``compact``). File counts stay
-    bounded at sustained QPS instead of growing one-file-per-answer.
-    Single-writer by design (the fixture contract); a shared production
-    cache would sit on a real table format's MERGE instead.
+    Small-file hygiene: each ``put`` appends one one-row file, so once
+    the directory holds ``compact_every`` part-files ``put`` folds it
+    back into a single last-write-wins file (``compact``). File counts
+    stay bounded at sustained QPS instead of growing one-file-per-answer.
+    Single-writer, local path by design (the fixture contract); a shared
+    production cache would sit on a real table format's MERGE instead.
     """
 
-    #: per-process instance memo (LRU, bounded) — answer_query reuses
-    #: ONE LlmCache (and its cached parquet DataFrame) per path instead
-    #: of re-listing and re-reading the cache directory on every query.
-    #: Bounded + unpersist-on-evict: every memoized instance pins a
-    #: Spark-cached DataFrame, so an unbounded dict in a long-lived
-    #: driver would accumulate persisted blocks one per cache path.
-    _instances: "OrderedDict[str, LlmCache]" = OrderedDict()
-    _MAX_INSTANCES = 8
+    SCHEMA = pa.schema([("args_hash", pa.string()), ("content", pa.string()),
+                        ("written_at", pa.timestamp("us", tz="UTC"))])
 
     @classmethod
     def for_path(cls, spark, path: str, compact_every: int = 64) -> "LlmCache":
-        inst = cls._instances.get(path)
-        if inst is not None and inst.spark is spark:
-            # honor the caller's compaction setting on lookup, not only
-            # on first construction
-            inst.compact_every = compact_every
-            cls._instances.move_to_end(path)
-            return inst
-        if inst is not None:  # stale session: release its pinned cache
-            inst._invalidate()
-        inst = cls(spark, path, compact_every)
-        cls._instances[path] = inst
-        cls._instances.move_to_end(path)
-        while len(cls._instances) > cls._MAX_INSTANCES:
-            _, evicted = cls._instances.popitem(last=False)
-            evicted._invalidate()
-        return inst
+        """The cache at ``path``; ``spark`` is accepted for callers that
+        hold a session but is not used."""
+        return cls(path, compact_every)
 
-    def __init__(self, spark, path: str, compact_every: int = 64):
-        self.spark = spark
+    def __init__(self, path: str, compact_every: int = 64):
         self.path = path
         self.compact_every = compact_every
-        self._df = None  # cached reader view; invalidated on put/compact
         self._recover()
 
     def _recover(self) -> None:
@@ -254,9 +246,6 @@ class LlmCache:
         live→__old and compacted→live where the live dir is absent. If
         a crash landed there, restore automatically instead of silently
         rebuilding an empty cache while the data sits stranded."""
-        import os
-        import shutil
-
         if os.path.exists(self.path):
             return
         tmp = f"{self.path}__compact"
@@ -269,43 +258,40 @@ class LlmCache:
             os.rename(old, self.path)
             shutil.rmtree(tmp, ignore_errors=True)
 
-    def _part_files(self) -> int:
-        import os
-
+    def _parts(self) -> list[str]:
         try:
-            return sum(
-                1 for f in os.scandir(self.path) if f.name.startswith("part-")
-            )
+            return [f.path for f in os.scandir(self.path) if f.name.startswith("part-")]
         except FileNotFoundError:
-            return 0
+            return []
 
-    def _view(self):
-        """Spark-cached view of the cache table, built once per
-        generation (invalidated by put/compact): repeated gets skip the
-        file listing + parquet scan after the first."""
-        if self._df is None:
-            self._recover()  # heal a crashed compact() before reading
-            if self._part_files() == 0:
-                return None
-            self._df = self.spark.read.parquet(self.path).cache()
-        return self._df
+    def _part_files(self) -> int:
+        return len(self._parts())
 
-    def _invalidate(self) -> None:
-        if self._df is not None:
-            self._df.unpersist()
-            self._df = None
+    def _read(self, where=None) -> pa.Table:
+        """Newest row per args_hash among the rows matching ``where``.
+        The explicit schema reads Spark-written (INT96) and
+        pyarrow-written timestamps alike."""
+        self._recover()  # heal a crashed compact() before reading
+        t = ds.dataset(self._parts(), schema=self.SCHEMA, format="parquet").to_table(
+            filter=where)
+        if t.num_rows < 2:
+            return t
+        t = t.sort_by([("args_hash", "ascending"), ("written_at", "descending"),
+                       ("content", "descending")])
+        keys = t.column("args_hash").combine_chunks()
+        return t.filter(pa.concat_arrays([pa.array([True]), pc.not_equal(keys[1:], keys[:-1])]))
+
+    def _write(self, table: pa.Table, directory: str) -> None:
+        # write under a hidden name, then rename: readers skip dot-files,
+        # so a crash mid-write never leaves a torn part file in the table
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(directory, f".{name}")
+        pq.write_table(table, tmp)
+        os.rename(tmp, os.path.join(directory, name))
 
     def get(self, args_hash: str) -> str | None:
-        df = self._view()
-        if df is None:
-            return None
-        row = (
-            df.where(F.col("args_hash") == args_hash)
-            .orderBy(F.desc("written_at"))
-            .select("content")
-            .first()
-        )
-        return row["content"] if row else None
+        t = self._read(pc.field("args_hash") == args_hash)
+        return t.column("content")[0].as_py() if t.num_rows else None
 
     def put(self, args_hash: str, content: str) -> None:
         # heal a crashed compact() BEFORE appending: writing first
@@ -314,48 +300,36 @@ class LlmCache:
         # dir and the next compact() rmtree's it — silently dropping
         # every previously cached answer
         self._recover()
-        self.spark.createDataFrame(
-            [(args_hash, content)], "args_hash string, content string"
-        ).withColumn("written_at", F.current_timestamp()).write.mode(
-            "append"
-        ).parquet(self.path)
-        self._invalidate()
+        os.makedirs(self.path, exist_ok=True)
+        now = datetime.datetime.now(datetime.timezone.utc)
+        self._write(pa.table({"args_hash": [args_hash], "content": [content],
+                              "written_at": [now]}, self.SCHEMA), self.path)
         if self.compact_every and self._part_files() >= self.compact_every:
             self.compact()
 
     def compact(self) -> None:
         """Fold the append log into one file, keeping the newest row per
         args_hash (same last-write-wins the reads apply)."""
-        import os
-        import shutil
-
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("args_hash").orderBy(F.desc("written_at"))
-        latest = (
-            self.spark.read.parquet(self.path)
-            .withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") == 1)
-            .drop("_rk")
-            .coalesce(1)
-        )
-        # crash-safe swap: write compacted → move live aside → move
-        # compacted in → drop the old dir. Between the two renames the
-        # LIVE path is briefly absent; _recover() (run on init and
-        # before every fresh read) restores the stranded __compact or
-        # __old dir automatically, so a crash in that window costs
-        # nothing but the restore. The local rename/rmtree calls match
-        # the cache's contract — a single-writer local-fixture path; a
-        # cluster deployment replaces this class with a real table
-        # format's MERGE.
+        latest = self._read()
+        # crash-safe swap: write compacted (data, then _SUCCESS) → move
+        # live aside → move compacted in → drop the old dir. Between the
+        # two renames the LIVE path is briefly absent; _recover() (run on
+        # init and before every read or put) restores the stranded
+        # __compact or __old dir automatically, so a crash in that
+        # window costs nothing but the restore. The local rename/rmtree
+        # calls match the cache's contract — a single-writer
+        # local-fixture path; a cluster deployment replaces this class
+        # with a real table format's MERGE.
         tmp = f"{self.path}__compact"
         old = f"{self.path}__old"
-        latest.write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(tmp, ignore_errors=True)
+        os.makedirs(tmp)
+        self._write(latest, tmp)
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
         shutil.rmtree(old, ignore_errors=True)
         os.rename(self.path, old)
         os.rename(tmp, self.path)
         shutil.rmtree(old)
-        self._invalidate()
 
 
 def answer_with_cache(

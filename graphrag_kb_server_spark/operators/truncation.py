@@ -13,12 +13,10 @@ then ``filter(cumsum <= budget)`` — exactly the prefix the sequential
 loop keeps, expressed declaratively. Token counts come from the shared
 deterministic tokenizer via a pandas UDF (the only Python step).
 
-Scale note: a global ``Window.orderBy`` is a single-task sort — correct
-here because truncation inputs are ALREADY top-k-limited small lists
-(≤ a few thousand rows) by construction; the budget filter exists to cut
-LLM context, not to scan big data. For large inputs use
-``approx_token_prefix`` (two-phase: per-partition partial sums, then
-offset join) — provided for completeness.
+Scale note: a global ``Window.orderBy`` is a single-task sort. Inputs
+are bounded: truncation only ever sees top-k-limited lists (≤ a few
+thousand rows) by construction, because the budget filter exists to cut
+LLM context, not to scan big data.
 """
 
 from __future__ import annotations

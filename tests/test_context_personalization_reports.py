@@ -65,8 +65,8 @@ def test_q20_dedup_combine(spark):
     assert [r["id"] for r in out] == [1, 2, 3]  # ids reassigned
 
 
-def test_q17_llm_cache(spark, tmp_out):
-    cache = LlmCache(spark, f"{tmp_out}/llm_cache")
+def test_q17_llm_cache(tmp_out):
+    cache = LlmCache(f"{tmp_out}/llm_cache")
     h = compute_args_hash("hybrid", "q?", {"k": 1})
     assert cache.get(h) is None
     a1 = answer_with_cache(cache, "hybrid", "q?", {"k": 1}, "ctx")
@@ -76,11 +76,11 @@ def test_q17_llm_cache(spark, tmp_out):
     assert a3 != a1 or compute_args_hash("local", "q?", {"k": 1}) != h
 
 
-def test_llm_cache_compaction_bounds_files(spark, tmp_out):
+def test_llm_cache_compaction_bounds_files(tmp_out):
     """Sustained puts don't grow one-file-per-answer forever: at
     compact_every part-files the cache folds into a single
     last-write-wins file, and reads still see the newest value."""
-    cache = LlmCache(spark, f"{tmp_out}/llm_cache_c", compact_every=4)
+    cache = LlmCache(f"{tmp_out}/llm_cache_c", compact_every=4)
     for i in range(10):
         cache.put(f"h{i % 3}", f"v{i}")
         assert cache._part_files() <= 4
@@ -98,44 +98,103 @@ def test_llm_cache_crash_recovery(spark, tmp_out):
     import shutil
 
     base = f"{tmp_out}/llm_cache_crash"
-    cache = LlmCache(spark, base)
+    cache = LlmCache(base)
     cache.put("k1", "v1")
     cache.put("k2", "v2")
     # simulate the crash window: live dir renamed aside, compacted dir
-    # fully written but not yet swapped in
+    # fully written (compact() writes _SUCCESS last) but not yet swapped in
     shutil.copytree(base, f"{base}__compact")
+    open(f"{base}__compact/_SUCCESS", "w").close()
     os.rename(base, f"{base}__old")
     assert not os.path.exists(base)
-    fresh = LlmCache(spark, base)  # __init__ recovery path
+    fresh = LlmCache(base)  # __init__ recovery path
     assert fresh.get("k1") == "v1" and fresh.get("k2") == "v2"
     assert not os.path.exists(f"{base}__old")
-    # ...and the same via _view when only __old survives (no _SUCCESS
-    # in a partial __compact)
+    # ...and the same on the next read when only __old survives (no
+    # _SUCCESS in a partial __compact)
     os.rename(base, f"{base}__old")
     os.makedirs(f"{base}__compact")  # partial: no _SUCCESS
     fresh2 = LlmCache.for_path(spark, base)
-    fresh2._df = None
     assert fresh2.get("k2") == "v2"
     assert not os.path.exists(f"{base}__compact")
 
 
-def test_llm_cache_memo_bounded(spark, tmp_out):
-    """The for_path memo is LRU-bounded and unpersists evicted
-    instances' pinned DataFrames (ADVICE r4)."""
-    LlmCache._instances.clear()
-    insts = []
-    for i in range(LlmCache._MAX_INSTANCES + 3):
-        c = LlmCache.for_path(spark, f"{tmp_out}/memo_{i}")
-        c.put("h", f"v{i}")
-        assert c.get("h") == f"v{i}"  # builds the pinned view
-        insts.append(c)
-    assert len(LlmCache._instances) == LlmCache._MAX_INSTANCES
-    # the oldest instances were evicted AND their views released
-    for c in insts[:3]:
-        assert c._df is None
-    # compact_every is honored on lookup, not just first construction
-    again = LlmCache.for_path(spark, f"{tmp_out}/memo_5", compact_every=2)
-    assert again.compact_every == 2
+def test_llm_cache_one_file_per_put(tmp_out, monkeypatch):
+    """Each put adds exactly one part file, so compaction runs every
+    compact_every files: 8 puts at compact_every=4 compact twice, at
+    puts 4 and 7 (the compacted file counts as one)."""
+    cache = LlmCache(f"{tmp_out}/llm_cache_p", compact_every=4)
+    compactions = []
+    compact = LlmCache.compact
+    monkeypatch.setattr(LlmCache, "compact",
+                        lambda self: (compactions.append(1), compact(self)))
+    counts = []
+    for i in range(8):
+        cache.put(f"h{i}", f"v{i}")
+        counts.append(cache._part_files())
+    assert counts == [1, 2, 3, 1, 2, 3, 1, 2]
+    assert len(compactions) == 2
+    assert [cache.get(f"h{i}") for i in range(8)] == [f"v{i}" for i in range(8)]
+
+
+def test_llm_cache_reads_spark_written_log(spark, tmp_out):
+    """A cache directory Spark wrote (INT96 timestamps, one append per
+    put) reads back newest-wins, also after the cache appends to it and
+    compacts it."""
+    path = f"{tmp_out}/llm_cache_spark"
+    for key, content in (("k", "old"), ("j", "only"), ("k", "new")):
+        spark.createDataFrame(
+            [(key, content)], "args_hash string, content string"
+        ).withColumn("written_at", F.current_timestamp()).write.mode(
+            "append"
+        ).parquet(path)
+    cache = LlmCache(path)
+    assert cache.get("k") == "new" and cache.get("j") == "only"
+    cache.put("k", "newest")
+    assert cache.get("k") == "newest"
+    cache.compact()
+    assert cache._part_files() == 1
+    assert cache.get("k") == "newest" and cache.get("j") == "only"
+
+
+def test_llm_cache_is_a_spark_table(spark, tmp_out):
+    """Spark reads the rows the cache wrote, before and after compaction."""
+    path = f"{tmp_out}/llm_cache_table"
+    cache = LlmCache(path)
+    cache.put("a", "1")
+    cache.put("b", "2")
+    cache.put("a", "3")
+
+    def rows():
+        df = spark.read.parquet(path)
+        assert dict(df.dtypes)["written_at"] == "timestamp"
+        assert df.where(F.col("written_at").isNull()).count() == 0
+        return sorted((r["args_hash"], r["content"]) for r in df.collect())
+
+    assert rows() == [("a", "1"), ("a", "3"), ("b", "2")]
+    cache.compact()
+    assert rows() == [("a", "3"), ("b", "2")]
+
+
+def test_llm_cache_ties_resolve_alike(tmp_out):
+    """Two rows of one key with the same written_at: get and compact
+    pick the same one."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = f"{tmp_out}/llm_cache_tie"
+    os.makedirs(path)
+    at = dt.datetime(2026, 1, 1, tzinfo=dt.timezone.utc)
+    for i, content in enumerate(("x", "y")):
+        pq.write_table(pa.table({"args_hash": ["k"], "content": [content],
+                                 "written_at": [at]}, LlmCache.SCHEMA),
+                       f"{path}/part-{i}.parquet")
+    cache = LlmCache(path)
+    before = cache.get("k")
+    cache.compact()
+    assert cache.get("k") == before
 
 
 def _centrality(spark):
