@@ -599,15 +599,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("text"),
             F.col("lang"),
         )
-        base = tempfile.mkdtemp(prefix="s_incr_")
-        pages_dir = f"{base}/pages"
-        pages.write.mode("overwrite").parquet(pages_dir)
-        run_incremental(spark, pages_dir, f"{base}/out", f"{base}/ck")
-        # replay with a fresh checkpoint: doc_status dedup must absorb it
-        run_incremental(spark, pages_dir, f"{base}/out", f"{base}/ck2")
-        return spark.read.parquet(f"{base}/out/documents_stream").select(
-            "doc_id", "url", "content"
-        )
+        with tempfile.TemporaryDirectory(prefix="s_incr_") as base:
+            pages_dir = f"{base}/pages"
+            pages.write.mode("overwrite").parquet(pages_dir)
+            run_incremental(spark, pages_dir, f"{base}/out", f"{base}/ck")
+            # replay with a fresh checkpoint: doc_status dedup must absorb it
+            run_incremental(spark, pages_dir, f"{base}/out", f"{base}/ck2")
+            # materialized before the directory goes
+            return spark.read.parquet(f"{base}/out/documents_stream").select(
+                "doc_id", "url", "content"
+            ).localCheckpoint(eager=True)
     q["s_incremental_docs"] = s_incremental_docs
 
     # ---- sessionization (training-pipeline op) ----
@@ -1355,11 +1356,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.lit(1.0).alias("weight"),
             F.lit("member").alias("keywords"),
         )
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="kg_graphml_rt_"), "g.graphml"
-        )
-        to_graphml(nodes, edges, path)
-        rnodes, redges = read_graphml(spark, path)
+        with tempfile.TemporaryDirectory(prefix="kg_graphml_rt_") as d:
+            path = os.path.join(d, "g.graphml")
+            to_graphml(nodes, edges, path)
+            rnodes, redges = read_graphml(spark, path)  # parses eagerly
         node_rows = rnodes.select(
             F.lit("node").alias("kind"),
             F.col("name").alias("a"),
@@ -1481,9 +1481,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("r_name").alias("parent_cluster"),
             F.lit(1).alias("size"),
         )
-        path = os.path.join(tempfile.mkdtemp(prefix="kg_gexf_rt_"), "c.gexf")
-        communities_to_gexf(comms, path)
-        gnodes, gedges = read_gexf(spark, path)
+        with tempfile.TemporaryDirectory(prefix="kg_gexf_rt_") as d:
+            path = os.path.join(d, "c.gexf")
+            communities_to_gexf(comms, path)
+            gnodes, gedges = read_gexf(spark, path)  # parses eagerly
         return gnodes.select(
             F.lit("node").alias("kind"),
             F.col("id").alias("a"),
@@ -1517,9 +1518,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             # bit-identical, no rounding coupling
             (F.col("n_nationkey").cast("double") / F.lit(8.0)).alias("score"),
         )
-        path = os.path.join(tempfile.mkdtemp(prefix="kg_xlsx_rt_"), "c.xlsx")
-        centrality_to_xlsx(cent, path)
-        parsed = read_xlsx(spark, path)
+        with tempfile.TemporaryDirectory(prefix="kg_xlsx_rt_") as d:
+            path = os.path.join(d, "c.xlsx")
+            centrality_to_xlsx(cent, path)
+            parsed = read_xlsx(spark, path)  # parses eagerly
         return parsed.select(
             "name", "info", F.col("score").cast("double").alias("score")
         )
@@ -1638,18 +1640,31 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["text_domain_stats"] = text_domain_stats
 
     def cluster_kmeans(spark, sf):
-        """Distributed Lloyd's k-means (operators/clustering.py):
-        broadcast-centroid assignment + per-dim avg refit, k=8 x 3
-        iterations over the 64-dim embeddings. The oracle is the SAME
-        algorithm unrolled in pure DuckDB SQL (materialized CTE per
-        iteration); the 6-dp centroid/distance rounding protocol with
-        cluster-id tie-breaks makes the two engines bit-comparable."""
+        """Lloyd's k-means (operators/clustering.py), k=8 x 3
+        iterations over the 64-dim embeddings; a table this small runs
+        the numpy driver twin. The oracle is the SAME algorithm
+        unrolled in pure DuckDB SQL (materialized CTE per iteration);
+        the 6-dp centroid/distance rounding protocol with cluster-id
+        tie-breaks makes the two engines bit-comparable."""
         from graphrag_kb_server_spark.operators.clustering import kmeans
 
         emb = _t(spark, sf, "embeddings")
         out, _ = kmeans(emb, "vec_id", "embedding", k=8, iters=3)
         return out
     q["cluster_kmeans"] = cluster_kmeans
+
+    def cluster_kmeans_distributed(spark, sf):
+        # the Spark rounds (literal-centroid array_min assignment,
+        # long-format avg refit) — kept oracled while kmeans routes
+        # small tables driver-side; identical oracle
+        from graphrag_kb_server_spark.operators.clustering import (
+            kmeans_distributed,
+        )
+
+        emb = _t(spark, sf, "embeddings")
+        out, _ = kmeans_distributed(emb, "vec_id", "embedding", k=8, iters=3)
+        return out
+    q["cluster_kmeans_distributed"] = cluster_kmeans_distributed
 
     def dedup_semantic_pairs(spark, sf):
         """SemDeDup composition: cosine >= 0.4 pairs WITHIN a k-means
@@ -4444,6 +4459,7 @@ SELECT split, lang, count(*) AS n_docs FROM r GROUP BY split, lang
         _kmeans_sql(8, 3, 64)
         + "\nSELECT vec_id, CAST(cluster AS INT) AS cluster, dist FROM a2"
     )
+    o["cluster_kmeans_distributed"] = o["cluster_kmeans"]
     # SemDeDup pairs: the final assignment self-joined within cluster;
     # sequential-fold cosine (list_sum preserves list order) rounded
     # to 6 dp like functions/vectors.py

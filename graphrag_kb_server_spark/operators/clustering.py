@@ -1,4 +1,4 @@
-"""Distributed Lloyd's k-means over embedding columns.
+"""Lloyd's k-means over embedding columns.
 
 The clustering pass behind SemDeDup-style semantic dedup and corpus
 bucketing: points are assigned to the nearest of k centroids, centroids
@@ -7,36 +7,57 @@ reference server has no clustering surface (its IVF cells come from
 hyperplane LSH — operators/similarity.py); k-means adds the
 data-dependent variant a curation pipeline wants.
 
-Spark-first decomposition — Lloyd's is a join and an aggregation:
+``kmeans`` follows the engine's one size policy
+(``session.collect_if_small``). A bounded input runs the rounds in
+numpy on the driver (``_kmeans_driver``): one collect, then each round
+is a handful of array ops instead of a Spark job. The probe is bounded
+in doubles, not rows: a point weighs ceil(d / EMBEDDING_DIM) probe
+rows, so at most ``DRIVER_MAX_ROWS × EMBEDDING_DIM`` doubles (~100 MB)
+reach the driver — 200k 64-d points, ~8.3k 1536-d ones. Id types whose
+string cast Python cannot reproduce (anything but string or integral),
+null ids and null, ragged or non-finite vectors take
+``kmeans_distributed``, the Spark rounds:
 
-- **assignment** is a crossJoin against the BROADCAST centroid table
-  (k rows — the model is tiny even when the data is 100 TB) followed by
-  a per-point argmin. Cost: N·k distance evaluations, all inside
-  Catalyst (``F.aggregate`` fold over ``zip_with`` — no Python per
-  row).
-- **update** is one map-side-combined aggregation: d per-dimension
-  ``avg`` columns per cluster (static d keeps it whole-stage-codegen;
-  no explode, no shuffle of N·d rows — partial aggregation collapses
-  each partition to ≤ k rows before the exchange).
+- **assignment** is row-local: the k centroids enter the plan as
+  literal arrays, and the per-point argmin is ``array_min`` over k
+  (distance, cluster) structs. No join and no shuffle of the N×d
+  vectors; distances are a sequential ``F.aggregate`` fold, all inside
+  Catalyst.
+- **refit** runs in long format: ``posexplode`` to (cluster, dim, val)
+  and one map-side-combined ``avg`` keyed (cluster, dim), so the
+  exchange carries ≤ k·d·partitions partial rows however wide the
+  vectors are.
 - the k·d centroid matrix is collected to the driver each round — the
   canonical structure of distributed Lloyd's (the model round-trips,
   the data never moves beyond the one agg shuffle).
 
-Determinism & engine parity: init picks the k points with the smallest
-(md5-hash, id) — the same stable draw the sampling family uses; both
-centroid means and point-centroid distances are rounded to 6 dp before
-comparison, with cluster-id tie-breaks, so different engines'
-summation-order ULPs (~1e-13) can never flip an argmin that the
-rounding has not already made an explicit tie.
+Determinism & engine parity (both paths): init picks the k points with
+the smallest (md5-hash, id) — the same stable draw the sampling family
+uses; centroid coordinates and point-centroid distances are rounded to
+6 dp HALF_UP like ``F.round``, with cluster-id tie-breaks, so different
+engines' summation-order ULPs (~1e-13) can never flip an argmin that
+the rounding has not already made an explicit tie. Clusters that lose
+all points keep their previous centroid.
 """
 
 from __future__ import annotations
 
+import hashlib
+import heapq
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from graphrag_kb_server_spark.functions.embedding import EMBEDDING_DIM
+from graphrag_kb_server_spark.functions.rounding import round6
 from graphrag_kb_server_spark.functions.vectors import to_double
-from graphrag_kb_server_spark.operators.sampling import _int_hash, _op_seed
+from graphrag_kb_server_spark.operators.sampling import _US, _int_hash, _op_seed
+from graphrag_kb_server_spark.session import DRIVER_MAX_ROWS, collect_if_small
+
+_EMPTY = "kmeans: empty points frame (nothing to cluster)"
 
 
 def _sq_dist(vec, cent) -> F.Column:
@@ -47,6 +68,17 @@ def _sq_dist(vec, cent) -> F.Column:
         F.zip_with(vec, cent, lambda a, b: (a - b) * (a - b)),
         F.lit(0.0),
         lambda acc, x: acc + x,
+    )
+
+
+def _check_args(k: int, iters: int) -> None:
+    if k < 1 or iters < 1:
+        raise ValueError(f"kmeans: k and iters must be >= 1, got {k}, {iters}")
+
+
+def _points(points: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    return points.select(
+        F.col(id_col).alias("_pid"), to_double(F.col(vec_col)).alias("_v")
     )
 
 
@@ -62,27 +94,107 @@ def kmeans(
     """Fixed-iteration Lloyd's k-means; returns (assignments, centroids).
 
     ``assignments`` is (id, cluster, dist) with dist the rounded
-    squared distance to the winning centroid; ``centroids`` is the
-    final k×d rounded matrix (the model — small by construction).
-    Clusters that lose all points keep their previous centroid, the
-    standard fixed-k convention.
+    squared distance to the winning centroid, plus the widened vector
+    as ``_vec`` when ``keep_vec``; ``centroids`` is the final k×d
+    rounded matrix (the model — small by construction). Fewer points
+    than k train len(points) centroids. Bounded inputs run on the
+    driver (module docstring); the rest take ``kmeans_distributed``.
     """
-    src = points.select(
-        F.col(id_col).alias("_pid"), to_double(F.col(vec_col)).alias("_v")
-    ).localCheckpoint(eager=False)
+    _check_args(k, iters)
+    src = _points(points, id_col, vec_col)
+    if isinstance(src.schema["_pid"].dataType, (T.StringType, T.IntegralType)):
+        # a point weighs one probe row per EMBEDDING_DIM coordinates
+        # (its first row carries it), so the row cap bounds the doubles;
+        # on one partition the probe's limit needs no exchange
+        copies = F.greatest(F.lit(1), F.ceil(F.size("_v") / EMBEDDING_DIM))
+        probe = collect_if_small(
+            src.select(F.explode(F.sequence(F.lit(1), copies)).alias("_n"), "*")
+            .select("_n", "_pid", F.when(F.col("_n") == 1, F.col("_v")).alias("_v"))
+            .coalesce(1),
+            DRIVER_MAX_ROWS,
+        )
+        if probe is not None:
+            pdf = probe[probe["_n"] == 1].reset_index(drop=True)
+            if pdf.empty:
+                raise ValueError(_EMPTY)
+            x = _matrix(pdf["_v"])
+            if x is not None and not pdf["_pid"].isna().any():
+                return _kmeans_driver(
+                    points.sparkSession, src.schema, id_col, pdf["_pid"], x,
+                    k, iters, seed, keep_vec,
+                )
+    return kmeans_distributed(points, id_col, vec_col, k, iters, seed, keep_vec)
 
+
+def _matrix(vecs: pd.Series) -> np.ndarray | None:
+    """The vectors as one n×d float64 matrix; None when one is null,
+    the widths differ or a value is not finite (the Spark rounds' null
+    and NaN orderings have no numpy twin)."""
+    if any(v is None for v in vecs) or len({len(v) for v in vecs}) != 1:
+        return None
+    x = np.stack(vecs.to_list()).astype(np.float64)
+    return x if np.isfinite(x).all() else None
+
+
+def _kmeans_driver(
+    spark, schema: T.StructType, id_col: str, ids: pd.Series, x: np.ndarray,
+    k: int, iters: int, seed: str, keep_vec: bool,
+) -> tuple[DataFrame, list[list[float]]]:
+    """The rounds of ``kmeans_distributed`` over the collected points,
+    in numpy: the same hash draw, the same sequential distance fold,
+    the same HALF_UP rounding and tie-break."""
+    salt = f"{_US}{_op_seed('kmeans', seed)}".encode()
+    pid = ids.to_list()
+    draw = heapq.nsmallest(k, range(len(pid)), key=lambda i: (
+        int(hashlib.md5(str(pid[i]).encode() + salt).hexdigest()[:8], 16), pid[i]
+    ))
+    cents = round6(x[draw])
+    for _ in range(iters):
+        d2 = np.zeros((len(x), len(cents)))
+        for j in range(x.shape[1]):  # _sq_dist's in-order fold
+            diff = x[:, j, None] - cents[None, :, j]
+            d2 += diff * diff
+        d2 = round6(d2)
+        cluster = d2.argmin(axis=1).astype(np.int32)  # ties: lower id
+        dist = d2[np.arange(len(x)), cluster]
+        sums = np.zeros_like(cents)
+        np.add.at(sums, cluster, x)
+        counts = np.bincount(cluster, minlength=len(cents))
+        fit = counts > 0  # empty clusters keep their centroid
+        cents[fit] = round6(sums[fit] / counts[fit, None])
+
+    out = pd.DataFrame({id_col: ids, "cluster": cluster, "dist": dist})
+    fields = [
+        T.StructField(id_col, schema["_pid"].dataType, schema["_pid"].nullable),
+        T.StructField("cluster", T.IntegerType()),
+        T.StructField("dist", T.DoubleType()),
+    ]
+    if keep_vec:
+        out["_vec"] = list(x)
+        fields.append(T.StructField("_vec", schema["_v"].dataType))
+    return spark.createDataFrame(out, T.StructType(fields)), cents.tolist()
+
+
+def kmeans_distributed(
+    points: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int = 10,
+    iters: int = 4,
+    seed: str = "42",
+    keep_vec: bool = False,
+) -> tuple[DataFrame, list[list[float]]]:
+    """The Spark rounds of ``kmeans``, same contract."""
+    _check_args(k, iters)
+    src = _points(points, id_col, vec_col).localCheckpoint(eager=False)
     init = (
         src.orderBy(_int_hash(F.col("_pid"), _op_seed("kmeans", seed)), "_pid")
         .limit(k)
         .collect()
     )
     if not init:
-        raise ValueError("kmeans: empty points frame (nothing to cluster)")
-    # fewer points than k: train with len(init) centroids (standard
-    # fixed-k convention degrades gracefully; documented vs the ADVICE
-    # r5 note about the silent behavior)
-    d = len(init[0]["_v"])
-    centroids = [[round(float(x), 6) for x in r["_v"]] for r in init]
+        raise ValueError(_EMPTY)
+    centroids = [round6(r["_v"]).tolist() for r in init]
 
     def _assign(cents) -> DataFrame:
         # centroids enter the plan as LITERAL arrays: the per-point

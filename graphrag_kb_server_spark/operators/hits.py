@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.rounding import round6
 from ..session import collect_if_small
 from .centrality import _weighted_edges
 
@@ -140,17 +141,9 @@ def _hits_driver(spark, name_dt, epd, iterations: int) -> DataFrame:
         np.add.at(h_raw, s, auth[t] * w)
         nh = np.sqrt((h_raw * h_raw).sum())
         hub = h_raw / nh if nh > 0 else h_raw
-    # HALF_UP like the distributed path's F.round (np.round is
-    # binary half-even — divergence at decimal-half boundaries)
-    from decimal import ROUND_HALF_UP, Decimal
-
-    def _r6(x: float) -> float:
-        return float(
-            Decimal(repr(float(x))).quantize(Decimal("1e-6"), ROUND_HALF_UP)
-        )
-
-    nodes_pd["hub"] = [_r6(v) for v in hub]
-    nodes_pd["authority"] = [_r6(v) for v in auth]
+    # HALF_UP like the distributed path's F.round
+    nodes_pd["hub"] = round6(hub)
+    nodes_pd["authority"] = round6(auth)
     schema = T.StructType(
         [
             T.StructField("name", name_dt),

@@ -31,9 +31,10 @@ def collect_if_small(df: DataFrame, max_rows: int = DRIVER_MAX_ROWS):
     collect decides and fetches at once, with no separate count job.
 
     The graph and linking operators (components, betweenness, pagerank,
-    HITS, LPA, modularity refinement, canonical_map) each pair an
-    in-process numpy/Python twin with distributed rounds. Iterative
-    rounds over a bounded input pay seconds of job and shuffle
+    HITS, LPA, modularity refinement, canonical_map) and k-means each
+    pair an in-process numpy/Python twin with distributed rounds
+    (k-means weighs a point by its width, see operators/clustering).
+    Iterative rounds over a bounded input pay seconds of job and shuffle
     scheduling for microseconds of work, so below the cap one collect
     plus the twin wins; 200k rows of an edge or name projection is tens
     of MB on the driver, while web-scale graphs stay distributed. KG

@@ -36,18 +36,47 @@ def test_full_correctness_artifact_covers_every_query():
     )
 
 
-def test_full_correctness_artifact_is_green():
+#: how tools/check_oracle.py records an entry it could not run because
+#: its external fixture is missing; only the dwell1 entries may say so
+UNVERIFIED = "unverified: fixture absent"
+
+
+def _classify(results: dict) -> tuple[list[str], list[str], list[str]]:
+    """(green, unverified, bad) entry names. Unverified is a class of
+    its own, never green."""
+    green, unverified, bad = [], [], []
+    for k, v in sorted(results.items()):
+        if k.startswith("kg_ref_dwell1_") and v.get("err") == UNVERIFIED:
+            unverified.append(k)
+        elif (v.get("err") or v.get("rows_match") is False
+              or v.get("hash_match") is False):
+            bad.append(k)
+        else:
+            green.append(k)
+    return green, unverified, bad
+
+
+def test_only_dwell1_entries_may_be_unverified():
+    ok = {"rows_match": True, "hash_match": True, "err": None}
+    unver = {"rows_match": None, "hash_match": None, "err": UNVERIFIED}
+    assert _classify({
+        "a": ok, "kg_ref_dwell1_degree": unver, "cluster_kmeans": unver,
+        "kg_ref_dwell1_topk": {**unver, "err": "spark error: boom"},
+    }) == (["a"], ["kg_ref_dwell1_degree"], ["cluster_kmeans", "kg_ref_dwell1_topk"])
+
+
+def test_full_correctness_artifact_is_green(record_property):
+    """Every entry is green except the dwell1 entries recorded as
+    unverified; those are reported, never counted green."""
     art = _latest_full_artifact()
     assert art is not None
     payload = json.loads(art.read_text())
     assert payload.get("failures", 1) == 0, (
         f"{art.name} records failures={payload.get('failures')}"
     )
-    data = payload.get("results", {})
-    bad = {
-        k: v
-        for k, v in data.items()
-        if v.get("err") or v.get("rows_match") is False
-        or v.get("hash_match") is False
-    }
-    assert not bad, f"{art.name} carries non-green entries: {sorted(bad)[:5]}"
+    green, unverified, bad = _classify(payload.get("results", {}))
+    assert not bad, f"{art.name} carries non-green entries: {bad[:5]}"
+    assert payload.get("unverified", 0) == len(unverified)
+    record_property("green", len(green))
+    record_property("unverified", len(unverified))
+    print(f"{art.name}: {len(green)} green, {len(unverified)} unverified")

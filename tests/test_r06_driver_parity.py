@@ -9,6 +9,8 @@ exactly at its cap.
   vs the *_distributed rounds — integer weights (the documented
   bit-parity contract).
 - pagerank: driver power iteration vs pagerank_distributed at 1e-12.
+- kmeans: both paths raise on an empty input (the full parity pins
+  live in test_clustering.py).
 """
 
 from __future__ import annotations
@@ -205,9 +207,10 @@ def test_pagerank_driver_matches_distributed(spark, with_nodes):
     assert abs(sum(drv.values()) - 1.0) < 1e-9
 
 
-def test_kmeans_empty_input_raises(spark):
-    from graphrag_kb_server_spark.operators.clustering import kmeans
+@pytest.mark.parametrize("name", ["kmeans", "kmeans_distributed"])
+def test_kmeans_empty_input_raises(spark, name):
+    from graphrag_kb_server_spark.operators import clustering
 
     empty = spark.createDataFrame([], "id string, v array<float>")
     with pytest.raises(ValueError, match="empty"):
-        kmeans(empty, "id", "v", k=3, iters=1)
+        getattr(clustering, name)(empty, "id", "v", k=3, iters=1)
