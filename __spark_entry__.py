@@ -72,6 +72,7 @@ from graphrag_kb_server_spark.plans.query_pipeline import (
     QueryParams,
     answer_query,
     kg_query,
+    kg_query_distributed,
 )
 from graphrag_kb_server_spark.streaming.incremental import windowed_event_counts
 
@@ -888,12 +889,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             rows, "section string, ix int, a string, b string, c string"
         )
 
-    def _kg_query_ctx(spark, mode, chunk_pick="weighted_polling"):
+    def _kg_query_ctx(spark, mode, run=kg_query, **params):
         g = _tiny_graph_tables(spark)
         hub = g.nodes.orderBy(F.desc("mention_count"), "name").first()["name"]
-        return _ctx_rows_df(spark, kg_query(
+        return _ctx_rows_df(spark, run(
             spark, g, f"What is the relationship between {hub} and others?",
-            QueryParams(mode=mode, top_k=10, chunk_pick=chunk_pick),
+            QueryParams(mode=mode, top_k=10, **params),
         ))
 
     def kg_query_context(spark, sf):
@@ -928,16 +929,29 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         lightrag_search.py:1472-1510). related_chunk_number=1 keeps the
         cosine selection BITING (num = n_entities/2 candidates survive)
         so this entry genuinely differentiates from the polling path."""
-        g = _tiny_graph_tables(spark)
-        hub = g.nodes.orderBy(F.desc("mention_count"), "name").first()["name"]
-        return _ctx_rows_df(spark, kg_query(
-            spark, g, f"What is the relationship between {hub} and others?",
-            QueryParams(
-                mode="hybrid", top_k=10, chunk_pick="vector",
-                related_chunk_number=1,
-            ),
-        ))
+        return _kg_query_ctx(
+            spark, "hybrid", chunk_pick="vector", related_chunk_number=1
+        )
     q["kg_query_context_vecpick"] = kg_query_context_vecpick
+
+    # the Spark program of kg_query — kept oracled while kg_query
+    # answers bounded KBs in-process; identical oracles
+    def kg_query_context_distributed(spark, sf):
+        return _kg_query_ctx(spark, "hybrid", run=kg_query_distributed)
+    q["kg_query_context_distributed"] = kg_query_context_distributed
+
+    def kg_query_context_mix_distributed(spark, sf):
+        return _kg_query_ctx(spark, "mix", run=kg_query_distributed)
+    q["kg_query_context_mix_distributed"] = kg_query_context_mix_distributed
+
+    def kg_query_context_vecpick_distributed(spark, sf):
+        return _kg_query_ctx(
+            spark, "hybrid", run=kg_query_distributed, chunk_pick="vector",
+            related_chunk_number=1,
+        )
+    q["kg_query_context_vecpick_distributed"] = (
+        kg_query_context_vecpick_distributed
+    )
 
     def _kg_query_inputs(spark):
         g = _tiny_graph_tables(spark)
@@ -2831,6 +2845,9 @@ ASOF LEFT JOIN
         {"section": "VARCHAR", "ix": "INT", "a": "VARCHAR", "b": "VARCHAR",
          "c": "VARCHAR"},
     )
+    for _name in ("kg_query_context", "kg_query_context_mix",
+                  "kg_query_context_vecpick"):
+        out[f"{_name}_distributed"] = out[_name]
     return out
 
 

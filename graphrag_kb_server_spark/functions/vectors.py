@@ -10,6 +10,9 @@ lightrag_search.py:985-1034) and the embedding-cosine dedup
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -49,6 +52,14 @@ def cosine_with_norms(a: Column, b: Column, na: Column, nb: Column) -> Column:
     return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot(a, b) / denom)
 
 
+def _query_norm(query_vec) -> float:
+    """The query norm, folded left to right in float64 like ``norm``."""
+    qn = 0.0
+    for x in query_vec:
+        qn += float(x) * float(x)
+    return math.sqrt(qn)
+
+
 def cosine_with_query(a: Column, query_vec) -> Column:
     """Cosine of ``a`` vs a CONSTANT query vector: the query norm is
     folded at plan-build time with the same left-to-right float64
@@ -57,17 +68,39 @@ def cosine_with_query(a: Column, query_vec) -> Column:
     each row pays one norm + one dot instead of five aggregates
     (cosine's when-condition and branch each re-evaluate both norms
     under interpreted-HOF evaluation)."""
-    import math
-
-    qn = 0.0
-    for x in query_vec:
-        qn += float(x) * float(x)
-    qn = math.sqrt(qn)
+    qn = _query_norm(query_vec)
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     return F.transform(
         F.array(norm(a) * F.lit(qn)),
         lambda d: F.when(d == 0.0, F.lit(0.0)).otherwise(dot(a, q) / d),
     )[0]
+
+
+def cosine_with_query_np(x: np.ndarray, query_vec) -> np.ndarray:
+    """``cosine_with_query`` over the rows of an n×d float64 matrix, in
+    numpy with the same per-dimension fold order — bit-identical scores
+    (``np.dot``/``np.sum`` sum pairwise and move the last ULP)."""
+    q = [float(v) for v in query_vec]
+    n2 = np.zeros(len(x))
+    dt = np.zeros(len(x))
+    for j, qj in enumerate(q):
+        col = x[:, j]
+        n2 += col * col
+        dt += col * qj
+    d = np.sqrt(n2) * _query_norm(q)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        return np.where(d == 0.0, 0.0, dt / d)
+
+
+def as_matrix(vecs) -> np.ndarray | None:
+    """Collected vectors as one n×d float64 matrix; None when there are
+    none, one is null, the widths differ or a value is not finite (the
+    Spark plans' null and NaN semantics have no numpy twin)."""
+    vecs = list(vecs)
+    if any(v is None for v in vecs) or len({len(v) for v in vecs}) != 1:
+        return None
+    x = np.stack(vecs).astype(np.float64)
+    return x if np.isfinite(x).all() else None
 
 
 def l2_normalize(a: Column) -> Column:

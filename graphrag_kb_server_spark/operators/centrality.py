@@ -531,6 +531,7 @@ def _pagerank_driver(
         contrib = np.zeros(n, dtype=np.float64)
         np.add.at(contrib, t, ranks[s] * f)
         ranks = base + damping * (contrib + dm / n)
+    # one partition: the sort of the bounded result needs no exchange
     return spark.createDataFrame(
         pd.DataFrame({"name": names, "rank": ranks}), schema
-    ).orderBy(F.desc("rank"), "name")
+    ).coalesce(1).orderBy(F.desc("rank"), "name")

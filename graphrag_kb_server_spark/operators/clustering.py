@@ -51,9 +51,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from graphrag_kb_server_spark.functions.embedding import EMBEDDING_DIM
+from graphrag_kb_server_spark.functions.embedding import EMBEDDING_DIM  # noqa: F401 (probe weight unit)
 from graphrag_kb_server_spark.functions.rounding import round6
-from graphrag_kb_server_spark.functions.vectors import to_double
+from graphrag_kb_server_spark.functions.vectors import as_matrix, to_double
 from graphrag_kb_server_spark.operators.sampling import _US, _int_hash, _op_seed
 from graphrag_kb_server_spark.session import DRIVER_MAX_ROWS, collect_if_small
 
@@ -103,37 +103,17 @@ def kmeans(
     _check_args(k, iters)
     src = _points(points, id_col, vec_col)
     if isinstance(src.schema["_pid"].dataType, (T.StringType, T.IntegralType)):
-        # a point weighs one probe row per EMBEDDING_DIM coordinates
-        # (its first row carries it), so the row cap bounds the doubles;
-        # on one partition the probe's limit needs no exchange
-        copies = F.greatest(F.lit(1), F.ceil(F.size("_v") / EMBEDDING_DIM))
-        probe = collect_if_small(
-            src.select(F.explode(F.sequence(F.lit(1), copies)).alias("_n"), "*")
-            .select("_n", "_pid", F.when(F.col("_n") == 1, F.col("_v")).alias("_v"))
-            .coalesce(1),
-            DRIVER_MAX_ROWS,
-        )
-        if probe is not None:
-            pdf = probe[probe["_n"] == 1].reset_index(drop=True)
+        pdf = collect_if_small(src, DRIVER_MAX_ROWS, vec_col="_v")
+        if pdf is not None:
             if pdf.empty:
                 raise ValueError(_EMPTY)
-            x = _matrix(pdf["_v"])
+            x = as_matrix(pdf["_v"])
             if x is not None and not pdf["_pid"].isna().any():
                 return _kmeans_driver(
                     points.sparkSession, src.schema, id_col, pdf["_pid"], x,
                     k, iters, seed, keep_vec,
                 )
     return kmeans_distributed(points, id_col, vec_col, k, iters, seed, keep_vec)
-
-
-def _matrix(vecs: pd.Series) -> np.ndarray | None:
-    """The vectors as one n×d float64 matrix; None when one is null,
-    the widths differ or a value is not finite (the Spark rounds' null
-    and NaN orderings have no numpy twin)."""
-    if any(v is None for v in vecs) or len({len(v) for v in vecs}) != 1:
-        return None
-    x = np.stack(vecs.to_list()).astype(np.float64)
-    return x if np.isfinite(x).all() else None
 
 
 def _kmeans_driver(

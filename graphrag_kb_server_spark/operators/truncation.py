@@ -42,13 +42,17 @@ def truncate_by_token_budget(
     order_col: str,
     budget: int,
     keep_at_least_one: bool = False,
+    flag_col: str | None = None,
 ) -> DataFrame:
     """Keep the maximal prefix (by ``order_col``) whose cumulative token
     count ≤ budget. The reference's truncate_list_by_token_size returns
     an EMPTY list when the first row alone overflows the budget
     (``return list_data[:i]`` with i=0), so the faithful default is
     False; pass ``keep_at_least_one=True`` to guarantee a non-empty
-    context instead."""
+    context instead.
+
+    With ``flag_col``, no row is dropped: the boolean ``flag_col`` marks
+    the kept prefix, so a caller can still count the input."""
     w = bounded_global(order_col).rowsBetween(Window.unboundedPreceding, 0)
     pos_w = bounded_global(order_col)
     out = (
@@ -59,6 +63,8 @@ def truncate_by_token_budget(
     cond = F.col("_cum") <= budget
     if keep_at_least_one:
         cond = cond | (F.col("_rn") == 1)
+    if flag_col is not None:
+        return out.withColumn(flag_col, cond).drop("_tok", "_cum", "_rn")
     return out.where(cond).drop("_tok", "_cum", "_rn")
 
 

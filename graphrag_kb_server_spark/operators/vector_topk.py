@@ -19,7 +19,7 @@ serving lives in operators/similarity.py.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
@@ -42,15 +42,16 @@ def cosine_topk(
     if exclude_key is not None:
         col, val = exclude_key
         out = out.where(F.col(col) != val)
-    return out.orderBy(F.desc(score_alias), *_tiebreak(table)).limit(k)
+    tb = tiebreak_col(table)
+    return out.orderBy(F.desc(score_alias), *([tb] if tb else [])).limit(k)
 
 
-def _tiebreak(table: DataFrame) -> list[Column]:
-    """Deterministic tie-break on the first string/id column."""
+def tiebreak_col(table: DataFrame) -> str | None:
+    """The deterministic tie-break: the first string/id column."""
     for f in table.schema.fields:
         if f.dataType.simpleString() in ("string", "bigint", "int"):
-            return [F.col(f.name)]
-    return []
+            return f.name
+    return None
 
 
 def cosine_topk_text(

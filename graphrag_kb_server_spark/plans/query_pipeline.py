@@ -5,6 +5,21 @@ Reference entry point: ``kg_query``
 stages labelled at :612-614 — 1. Search → 2. Truncate → 3. Merge chunks
 → 4. Build LLM context.
 
+Which path runs: ``kg_query`` follows the engine's one size policy
+(``session.collect_if_small``). It probes the raw projection of every
+table the mode reads — nodes, edges and chunk (id, path) rows; entity
+embeddings for local/hybrid/mix, relation embeddings for
+global/hybrid/mix, chunk embeddings for mix or ``chunk_pick="vector"``
+— with an embedding row weighing ceil(d / EMBEDDING_DIM) rows. When
+every probe fits and holds nothing the twin cannot mirror
+(``_probe``), the four stages run in Python and numpy on the driver
+(``_kg_query_driver``), as the reference serves from its in-process
+nano-vectordb matrices and JSON KV stores: one collect per table, plus
+one for the text and path properties of the merged chunks, and no plan
+building. Otherwise ``kg_query_distributed``, the Spark program below,
+runs; both return the same ``QueryContext``. The cap is the engine's
+shared row cap; measured crossovers are in CHANGES.md.
+
 Spark lifecycle (SURVEY.md §3.1): the query embedding is computed once
 (reference :959-974) and broadcast by value; local/global branches are
 independent sub-plans Spark schedules in parallel; every order-sensitive
@@ -20,20 +35,26 @@ search; hybrid = both; mix = both + direct chunk vector search.
 from __future__ import annotations
 
 import json
+import math
 import re
 from collections import Counter
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
-from pyspark.sql import DataFrame, Observation, SparkSession, Window
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .. import GRAPH_FIELD_SEP
 from ..functions.embedding import embed_text
+from ..functions.vectors import as_matrix, cosine_with_query_np
+from ..session import DRIVER_MAX_ROWS, collect_if_small
 from ..tokenizer import count_tokens
 from ..operators.merge import rank_branch, round_robin_merge
 from ..operators.polling import gradient_quotas, weighted_polling_pick
 from ..operators.truncation import truncate_by_token_budget
-from ..operators.vector_topk import cosine_topk
+from ..operators.vector_topk import cosine_topk, tiebreak_col
 
 _STOPWORDS = {
     "the", "a", "an", "of", "in", "on", "to", "and", "or", "is", "are",
@@ -247,14 +268,11 @@ def gather_chunks_from_members(
     )
 
 
-def kg_query(
-    spark: SparkSession,
-    g: GraphTables,
-    query: str,
-    params: QueryParams | None = None,
-    user_keywords: list[str] | None = None,
-) -> QueryContext:
-    params = params or QueryParams()
+def _start(
+    query: str, params: QueryParams, user_keywords: list[str] | None
+) -> tuple[QueryContext, np.ndarray]:
+    """Both paths' prologue: the mode check, the keywords and the query
+    embedding, in an otherwise empty context."""
     mode = "hybrid" if params.mode == "all" else params.mode
     if mode not in ("local", "global", "hybrid", "mix"):
         # an unknown/misspelled mode would otherwise run zero branches
@@ -265,14 +283,469 @@ def kg_query(
             "(expected local | global | hybrid | mix | all)"
         )
     keywords = extract_keywords(query, user_keywords)
+    hl, ll = extract_keywords_hl_ll(query, user_keywords)
     # Q1: embed once, reuse across all vector ops (reference :959-974)
     qvec = embed_text(query if not keywords else " ".join(keywords))
+    ctx = QueryContext(keywords=keywords, keywords_hl=hl, keywords_ll=ll, mode=mode)
+    return ctx, qvec
+
+
+def _branches(mode: str) -> tuple[bool, bool, bool]:
+    """A mode's (entity, relation, chunk-vector) search branches."""
+    return (
+        mode in ("local", "hybrid", "mix"),
+        mode in ("global", "hybrid", "mix"),
+        mode == "mix",
+    )
+
+
+def _chunk_budget(ctx: QueryContext, query: str, params: QueryParams) -> int:
+    """Q14: the dynamic chunk token budget (lightrag_search.py:761-823):
+    max_total − tokens(system-prompt scaffold) − tokens(kg context
+    ACTUALLY kept) − tokens(query) − 200 buffer, all through the shared
+    tokenizer — the reference formula, not the configured-maxima
+    estimate."""
+    from ..operators.context_ops import build_rag_prompt
+
+    pre_kg_context = KG_QUERY_CONTEXT_TEMPLATE.format(
+        entities_str=_json_lines(ctx.entities, ("entity", "type", "description")),
+        relations_str=_json_lines(
+            ctx.relations, ("entity1", "entity2", "description")
+        ),
+        text_chunks_str="",
+        reference_list_str="",
+    )
+    pre_sys_prompt = build_rag_prompt("", params.response_type, params.user_prompt)
+    return max(
+        params.max_total_tokens
+        - count_tokens(pre_sys_prompt)
+        - count_tokens(pre_kg_context)
+        - count_tokens(query)
+        - 200,  # reference: reserved for reference list + safety
+        0,
+    )
+
+
+def _finish(
+    ctx: QueryContext, refs: list[tuple], chunks: list[tuple],
+    counts: tuple[int, int, int], available_chunk_tokens: int,
+) -> QueryContext:
+    """Stage 4's context from the ordered (ref_ix, file_path,
+    last_modified) reference rows and (chunk_id, content, file_path)
+    chunk rows, plus the processing_info counts (entities, relations,
+    merged chunks found before truncation)."""
+    ctx.references = [
+        {"reference_id": ix, "file_path": fp, "last_modified": lm}
+        for ix, fp, lm in refs
+    ]
+    ref_by_path = {fp: ix for ix, fp, _ in refs}
+
+    def _ref_for(raw_path: str) -> int:
+        # a chunk's file_path may be a <SEP>-joined multi-file string;
+        # refs are keyed on the EXPANDED single paths (Q21), so cite the
+        # first (min ref_ix) matching expanded path — the reference's
+        # generate_reference_list_from_chunks behavior
+        # (lightrag_search.py:826-861)
+        hits = [
+            ref_by_path[p]
+            for p in (raw_path or "").split(GRAPH_FIELD_SEP)
+            if p in ref_by_path
+        ]
+        return min(hits) if hits else 0
+
+    ctx.chunks = [
+        {"reference_id": _ref_for(fp), "content": content, "chunk_id": cid,
+         "file_path": fp}
+        for cid, content, fp in chunks
+    ]
+    n_entities, n_relations, n_merged = counts
+    ctx.processing_info = {
+        "total_entities_found": n_entities,
+        "total_relations_found": n_relations,
+        "entities_after_truncation": len(ctx.entities),
+        "relations_after_truncation": len(ctx.relations),
+        "merged_chunks_count": n_merged,
+        "final_chunks_count": len(ctx.chunks),
+        "available_chunk_tokens": available_chunk_tokens,
+    }
+    return ctx
+
+
+def kg_query(
+    spark: SparkSession,
+    g: GraphTables,
+    query: str,
+    params: QueryParams | None = None,
+    user_keywords: list[str] | None = None,
+) -> QueryContext:
+    """The 4-stage query (module docstring): in-process when every
+    table it reads passes the probe, else ``kg_query_distributed``."""
+    params = params or QueryParams()
+    ctx, qvec = _start(query, params, user_keywords)
+    tables = _probe(g, ctx.mode, params, len(qvec))
+    if tables is not None:
+        out = _kg_query_driver(g, tables, replace(ctx), qvec, query, params)
+        if out is not None:
+            return out
+    return _kg_query_distributed(g, ctx, qvec, query, params)
+
+
+def _probe(g: GraphTables, mode: str, params: QueryParams, dim: int) -> dict | None:
+    """One ``collect_if_small`` per table the mode reads, projected to
+    the columns the twin uses; an embedding row weighs its width. Chunk
+    text is not probed: ``_fetch`` reads it for the merged chunks only.
+
+    None — run the Spark program — when a table is over the cap or
+    holds what the twin does not mirror: a null or duplicate key, a
+    null or NaN edge weight, a null chunk id in a provenance list, a
+    null, ragged or non-finite vector or one whose width is not the
+    query's (Spark null-pads it and the score turns null), or a
+    ``last_modified`` that is not a timestamp."""
+    want_local, want_global, want_vector = _branches(mode)
+    pp = g.path_properties
+    if pp is not None and not isinstance(
+        pp.schema["last_modified"].dataType, T.TimestampType
+    ):
+        return None
+
+    def emb(df: DataFrame, keys: list[str]) -> tuple:
+        tb = tiebreak_col(df)
+        tb = F.col(tb) if tb else F.lit(0)
+        return df, keys, [tb.alias("_tb"), "embedding"], "embedding"
+
+    # name → (frame, key columns, other columns, vector column). The
+    # tables that grow with the corpus come first, the narrowest first:
+    # a KB over the cap usually stops at the chunk probe, which costs
+    # least per row
+    specs = {
+        "chunks": (g.chunks, ["chunk_id"], ["file_path"], None),
+        "edges": (g.edges, ["src", "tgt"],
+                  ["description", "weight", "source_chunk_ids"], None),
+    }
+    if want_global:
+        specs["relation_embeddings"] = emb(g.relation_embeddings, ["src", "tgt"])
+    if want_vector or params.chunk_pick == "vector":
+        specs["chunk_embeddings"] = emb(g.chunk_embeddings, ["chunk_id"])
+    specs["nodes"] = (g.nodes, ["name"],
+                      ["type", "description", "source_chunk_ids"], None)
+    if want_local:
+        specs["entity_embeddings"] = emb(g.entity_embeddings, ["name"])
+
+    out = {}
+    for name, (df, keys, cols, vec) in specs.items():
+        pdf = collect_if_small(df.select(*keys, *cols), DRIVER_MAX_ROWS, vec_col=vec)
+        if (pdf is None or pdf[keys].isna().any(axis=None)
+                or pdf.duplicated(keys).any()):
+            return None
+        if vec is not None:
+            x = as_matrix(pdf.pop(vec)) if len(pdf) else np.zeros((0, dim))
+            if x is None or x.shape[1] != dim or pdf["_tb"].isna().any():
+                return None
+            pdf = (pdf, x)
+        out[name] = pdf
+    if out["edges"]["weight"].isna().any():
+        return None
+    for name in ("nodes", "edges"):
+        ids = [a for a in out[name]["source_chunk_ids"] if a is not None and len(a)]
+        if ids and pd.isna(np.concatenate(ids)).any():
+            return None
+    return out
+
+
+def _fetch(g: GraphTables, chunk_ids: list[str], paths: set) -> tuple | None:
+    """The merged chunks' text (chunk_id → content) and their paths'
+    ``last_modified`` (path → value, as a ``Row`` collect returns it),
+    in one collect of a tagged union; None when a path has more than
+    one property row (the Spark program's join would repeat it)."""
+    part = g.chunks.where(F.col("chunk_id").isin(chunk_ids)).select(
+        F.lit("c").alias("_sec"), F.col("chunk_id").alias("_key"), "content",
+        F.lit(None).cast("timestamp").alias("last_modified"),
+    )
+    if g.path_properties is not None and paths:
+        part = part.unionByName(
+            g.path_properties.where(F.col("file_path").isin(sorted(paths))).select(
+                F.lit("p").alias("_sec"), F.col("file_path").alias("_key"),
+                F.lit(None).cast("string").alias("content"), "last_modified",
+            )
+        )
+    content, lm = {}, {}
+    for r in part.collect():
+        if r["_sec"] == "c":
+            content[r["_key"]] = r["content"]
+        elif r["_key"] in lm:
+            return None
+        else:
+            lm[r["_key"]] = r["last_modified"]
+    return content, lm
+
+
+# ── The in-process twin of kg_query_distributed. Each step keeps a
+#    Spark value semantic: cosine folds per dimension in order; top-k
+#    orders by (score desc, tie-break column) and limits before its
+#    inner join; every rank sorts by the same keys; F.to_json is
+#    compact and drops null fields. ─────────────────────────────────
+
+_JSON_ESCAPES = {'"': '\\"', "\\": "\\\\", "\b": "\\b", "\f": "\\f",
+                 "\n": "\\n", "\r": "\\r", "\t": "\\t"}
+_JSON_SPECIAL = re.compile(r'["\\\x00-\x1f]')
+
+
+def _to_json(fields: tuple) -> str:
+    """``F.to_json(F.struct(...))`` of (name, string) fields: compact,
+    null fields dropped, Jackson's escapes (``\\u00XX`` upper-case)."""
+    def esc(m: re.Match) -> str:
+        c = m.group()
+        return _JSON_ESCAPES.get(c) or f"\\u{ord(c):04X}"
+
+    return "{" + ",".join(
+        f'"{k}":"{_JSON_SPECIAL.sub(esc, v)}"' for k, v in fields if v is not None
+    ) + "}"
+
+
+def _topk(probed: tuple, qvec, k: int) -> list[tuple[int, float]]:
+    """``cosine_topk`` as (row, score): score desc, then the tie-break
+    column, limit k."""
+    pdf, x = probed
+    s = cosine_with_query_np(x, qvec)
+    if k <= 0:
+        return []
+    cand = range(len(s))
+    if len(s) > k:  # every row tied with the k-th score stays a candidate
+        cand = np.flatnonzero(s >= np.partition(s, len(s) - k)[len(s) - k])
+    tb = pdf["_tb"].tolist()
+    return [(int(i), float(s[i]))
+            for i in sorted(cand, key=lambda i: (-s[i], tb[i]))[:k]]
+
+
+def _round_robin(branches: list[list], key) -> list:
+    """``round_robin_merge``: interleave at pos × n + branch; the first
+    occurrence of a key wins; list position is merge_ix."""
+    n = len(branches)
+    order = sorted(
+        (pos * n + b, b, pos)
+        for b, rows in enumerate(branches) for pos in range(len(rows))
+    )
+    seen, out = set(), []
+    for _, b, pos in order:
+        row = branches[b][pos]
+        if key(row) not in seen:
+            seen.add(key(row))
+            out.append(row)
+    return out
+
+
+def _prefix(rows: list, tokens, budget: int) -> list:
+    """``truncate_by_token_budget``: the rows whose running token count
+    stays within the budget."""
+    out, cum = [], 0
+    for r in rows:
+        cum += tokens(r)
+        if cum > budget:
+            break
+        out.append(r)
+    return out
+
+
+def _gather(members: list) -> dict:
+    """``gather_chunks_from_members`` over the members' chunk id lists
+    in merge_ix order: chunk_id → [first member's merge_ix, occurrence]."""
+    out: dict = {}
+    for ix, ids in enumerate(members):
+        for cid in ids if ids is not None else ():
+            if cid in out:
+                out[cid][1] += 1
+            else:
+                out[cid] = [ix, 1]
+    return out
+
+
+def _poll(gathered: dict, n_entities: int, per_entity: int) -> list[str]:
+    """``gradient_quotas`` + ``weighted_polling_pick``: the entity at
+    merge_ix r keeps its max(1, floor(B(R − r) / (R(R + 1)/2) + 0.5))
+    first-owned chunks by (occurrence desc, chunk_id), B = per_entity
+    × R."""
+    budget = per_entity * n_entities
+    tri = n_entities * (n_entities + 1) / 2.0
+    owned: dict = {}
+    for cid, (ix, occ) in gathered.items():
+        owned.setdefault(ix, []).append((-occ, cid))
+    picked = []
+    for ix, rows in owned.items():
+        quota = max(1, math.floor(budget * (n_entities - ix) / tri + 0.5))
+        picked += [cid for _, cid in sorted(rows)[:quota]]
+    return picked
+
+
+def _kg_query_driver(
+    g: GraphTables, t: dict, ctx: QueryContext, qvec, query: str,
+    params: QueryParams,
+) -> QueryContext | None:
+    """The four stages of ``kg_query_distributed`` over the probed
+    tables, in Python and numpy (see the notes above); None when
+    ``_fetch`` finds what the twin does not mirror."""
+    want_local, want_global, want_vector = _branches(ctx.mode)
+    nodes, edges, chunks = t["nodes"], t["edges"], t["chunks"]
+    n_name, n_type, n_desc, n_ids = (
+        nodes[c].tolist() for c in ("name", "type", "description", "source_chunk_ids")
+    )
+    e_src, e_tgt, e_desc, e_w, e_ids = (
+        edges[c].tolist()
+        for c in ("src", "tgt", "description", "weight", "source_chunk_ids")
+    )
+    node_ix = {name: i for i, name in enumerate(n_name)}
+    edge_ix = {key: j for j, key in enumerate(zip(e_src, e_tgt))}
+    chunk_path = dict(zip(chunks["chunk_id"], chunks["file_path"]))
+
+    def node(i: int, vscore: float) -> dict:
+        return {"name": n_name[i], "type": n_type[i], "description": n_desc[i],
+                "ids": n_ids[i], "vscore": vscore}
+
+    def edge(j: int, vscore: float) -> dict:
+        return {"src": e_src[j], "tgt": e_tgt[j], "description": e_desc[j],
+                "weight": e_w[j], "ids": e_ids[j], "vscore": vscore}
+
+    # ── Stage 1: search + cross-derivation ───────────────────────────
+    loc = glob = None
+    if want_local:
+        pdf, _ = t["entity_embeddings"]
+        names = pdf["name"].tolist()
+        loc = [node(node_ix[names[i]], s)
+               for i, s in _topk(t["entity_embeddings"], qvec, params.top_k)
+               if names[i] in node_ix]
+        loc.sort(key=lambda r: (-r["vscore"], r["name"]))
+    if want_global:
+        pdf, _ = t["relation_embeddings"]
+        keys = list(zip(pdf["src"], pdf["tgt"]))
+        glob = [edge(edge_ix[keys[i]], s)
+                for i, s in _topk(t["relation_embeddings"], qvec, params.top_k)
+                if keys[i] in edge_ix]
+        glob.sort(key=lambda r: (-r["vscore"], r["src"], r["tgt"]))
+
+    ent_branches = [] if loc is None else [loc]
+    if glob is not None:
+        ep: dict = {}  # endpoint → max score of its top relations
+        for r in glob:
+            for name in (r["src"], r["tgt"]):
+                ep[name] = max(ep.get(name, r["vscore"]), r["vscore"])
+        ep_rows = [node(node_ix[n], s) for n, s in ep.items() if n in node_ix]
+        ep_rows.sort(key=lambda r: (-r["vscore"], r["name"]))
+        ent_branches.append(ep_rows)
+    entities = _round_robin(ent_branches, lambda r: r["name"]) if ent_branches else None
+
+    rel_branches = [] if glob is None else [glob]
+    if loc is not None:
+        # a (src, tgt) pair takes the max score over both its endpoints
+        score = {r["name"]: r["vscore"] for r in loc}
+        hit = np.flatnonzero(
+            edges["src"].isin(list(score)).to_numpy()
+            | edges["tgt"].isin(list(score)).to_numpy()
+        )
+        inc = [edge(j, max(score[e] for e in (e_src[j], e_tgt[j]) if e in score))
+               for j in hit]
+        inc.sort(key=lambda r: (-r["vscore"], -r["weight"], r["src"], r["tgt"]))
+        rel_branches.append(inc)
+    relations = (
+        _round_robin(rel_branches, lambda r: (r["src"], r["tgt"]))
+        if rel_branches else None
+    )
+
+    # ── Stage 2: token truncation of the serialized rows ─────────────
+    n_entities = n_relations = 0
+    if entities is not None:
+        n_entities = len(entities)
+        entities = _prefix(entities, lambda r: count_tokens(_to_json((
+            ("entity", r["name"]), ("type", r["type"]),
+            ("description", r["description"]),
+        ))), params.max_entity_tokens)
+        ctx.entities = [{"entity": r["name"], "type": r["type"],
+                         "description": r["description"]} for r in entities]
+    if relations is not None:
+        n_relations = len(relations)
+        relations = _prefix(relations, lambda r: count_tokens(_to_json((
+            ("entity1", r["src"]), ("entity2", r["tgt"]),
+            ("description", r["description"]),
+        ))), params.max_relation_tokens)
+        ctx.relations = [{"entity1": r["src"], "entity2": r["tgt"],
+                          "description": r["description"]} for r in relations]
+
+    # ── Stage 3: chunk gathering, picking and merge ──────────────────
+    branches: list[list[str]] = []
+    if want_vector:
+        pdf, _ = t["chunk_embeddings"]
+        ids = pdf["chunk_id"].tolist()
+        top = _topk(t["chunk_embeddings"], qvec, params.related_chunk_number * 2)
+        vec = [(ids[i], s) for i, s in top if ids[i] in chunk_path]
+        branches.append([cid for cid, _ in sorted(vec, key=lambda v: (-v[1], v[0]))])
+    ent_ids: set = set()
+    if entities is not None:
+        got = _gather([r["ids"] for r in entities])
+        if params.chunk_pick == "vector":
+            pdf, x = t["chunk_embeddings"]
+            mask = pdf["chunk_id"].isin(list(got)).to_numpy()
+            ids = pdf["chunk_id"][mask].tolist()
+            s = cosine_with_query_np(x[mask], embed_text(query))
+            num = max(int(params.related_chunk_number * max(len(entities), 1) / 2), 1)
+            top = sorted(range(len(ids)), key=lambda i: (-s[i], ids[i]))[:num]
+            picked = [ids[i] for i in top]
+        else:
+            picked = _poll(got, len(entities), params.related_chunk_number)
+        ent_ids = set(picked)
+        branches.append(sorted(picked, key=lambda c: (-got[c][1], c)))
+    if relations is not None:
+        got = _gather([r["ids"] for r in relations])
+        rel = [c for c in got if c not in ent_ids]
+        branches.append(sorted(rel, key=lambda c: (-got[c][1], c)))
+
+    merged = [c for c in _round_robin(branches, lambda c: c) if c in chunk_path]
+    available = _chunk_budget(ctx, query, params)
+    fetched = ({}, {})
+    if merged:
+        fetched = _fetch(g, merged, {
+            p for c in merged if chunk_path[c] is not None
+            for p in chunk_path[c].split(GRAPH_FIELD_SEP)
+        })
+        if fetched is None:
+            return None
+    content, lm = fetched
+    kept = _prefix(merged, lambda c: count_tokens(content[c] or ""), available)
+
+    # ── Stage 4: numbered, <SEP>-expanded references ─────────────────
+    first: dict = {}  # raw file_path → ref_ix, in merge_ix order
+    for c in kept:
+        first.setdefault(chunk_path[c], len(first) + 1)
+    expanded: dict = {}
+    for raw, ix in first.items():
+        for p in raw.split(GRAPH_FIELD_SEP) if raw is not None else ():
+            expanded.setdefault(p, ix)
+    refs = sorted((ix, p, lm.get(p)) for p, ix in expanded.items())
+    return _finish(
+        ctx, refs, [(c, content[c], chunk_path[c]) for c in kept],
+        (n_entities, n_relations, len(merged)), available,
+    )
+
+
+def kg_query_distributed(
+    spark: SparkSession,
+    g: GraphTables,
+    query: str,
+    params: QueryParams | None = None,
+    user_keywords: list[str] | None = None,
+) -> QueryContext:
+    """The Spark program of ``kg_query``, same contract: the four stages
+    as one DataFrame plan per stage, for KBs over the driver cap."""
+    params = params or QueryParams()
+    ctx, qvec = _start(query, params, user_keywords)
+    return _kg_query_distributed(g, ctx, qvec, query, params)
+
+
+def _kg_query_distributed(
+    g: GraphTables, ctx: QueryContext, qvec, query: str, params: QueryParams
+) -> QueryContext:
+    mode = ctx.mode
 
     # ── Stage 1: search (independent branches; Spark runs them when
     #    actions fire — the asyncio.gather analogue) ──────────────────
-    want_local = mode in ("local", "hybrid", "mix")
-    want_global = mode in ("global", "hybrid", "mix")
-    want_vector = mode == "mix"
+    want_local, want_global, want_vector = _branches(mode)
 
     # Reference hybrid semantics (lightrag_search.py:984-1066): the
     # local (entity) search ALSO yields the edges incident to its top
@@ -356,13 +829,12 @@ def kg_query(
     # ordering are identical; only the boundary token arithmetic
     # differs (Catalyst's to_json has no separator option; the q8
     # oracle pins THIS accounting).
-    # Pre-truncation counts ride Observations on the plan nodes the
-    # final collects execute anyway — zero extra Spark jobs (the
-    # reference's processing_info counts, lightrag_search.py:693-712).
-    ent_obs = rel_obs = None
+    # Truncation flags the kept prefix (_kept) instead of dropping the
+    # rest, so the checkpoints below still hold every row and the
+    # pre-truncation counts (the reference's processing_info counts,
+    # lightrag_search.py:693-712) come from the collects the stages run
+    # anyway — zero extra Spark jobs.
     if entities is not None:
-        ent_obs = Observation("n_entities_found")
-        entities = entities.observe(ent_obs, F.count(F.lit(1)).alias("n"))
         entities = entities.withColumn(
             "_ser",
             F.to_json(
@@ -372,11 +844,10 @@ def kg_query(
             ),
         )
         entities = truncate_by_token_budget(
-            entities, "_ser", "merge_ix", params.max_entity_tokens
+            entities, "_ser", "merge_ix", params.max_entity_tokens,
+            flag_col="_kept",
         ).drop("_ser")
     if relations is not None:
-        rel_obs = Observation("n_relations_found")
-        relations = relations.observe(rel_obs, F.count(F.lit(1)).alias("n"))
         relations = relations.withColumn(
             "_ser",
             F.to_json(
@@ -388,17 +859,15 @@ def kg_query(
             ),
         )
         relations = truncate_by_token_budget(
-            relations, "_ser", "merge_ix", params.max_relation_tokens
+            relations, "_ser", "merge_ix", params.max_relation_tokens,
+            flag_col="_kept",
         ).drop("_ser")
 
     # ── Stage 2b: materialize + collect the token-budgeted entity /
     #    relation context. Q14's budget needs the tokens ACTUALLY kept
-    #    (lightrag_search.py:780-812); the eager checkpoint is the one
-    #    action that populates the pre-truncation Observations AND lets
-    #    stage 3 reuse the truncated lists without recomputing the
+    #    (lightrag_search.py:780-812); the eager checkpoint lets stage 3
+    #    reuse the truncated lists without recomputing the
     #    merge/truncate windows per downstream branch. ─────────────────
-    hl, ll = extract_keywords_hl_ll(query, user_keywords)
-    ctx = QueryContext(keywords=keywords, keywords_hl=hl, keywords_ll=ll, mode=mode)
     n_entities_found = n_relations_found = 0
     # Both truncated branches materialize in ONE tagged-union
     # checkpoint (their independent sub-plans run as parallel stages of
@@ -412,46 +881,50 @@ def kg_query(
     parts = []
     if entities is not None:
         parts.append(
-            entities.select(*ent_cols).withColumn("_sec", F.lit("ent"))
+            entities.select(*ent_cols, "_kept").withColumn("_sec", F.lit("ent"))
         )
     if relations is not None:
         parts.append(
-            relations.select(*rel_cols).withColumn("_sec", F.lit("rel"))
+            relations.select(*rel_cols, "_kept").withColumn("_sec", F.lit("rel"))
         )
     if parts:
         both = parts[0]
         for p in parts[1:]:
             both = both.unionByName(p, allowMissingColumns=True)
-        # NOTE: this EAGER checkpoint is the DataFrame action that
-        # fires the CollectMetrics nodes feeding ent_obs/rel_obs below —
-        # the checkpoint replaces the logical plan with a LogicalRDD, so
-        # the later collect() no longer contains them. If this ever
-        # becomes lazy (or a branch is pruned before it), Observation.get
-        # would block forever; keep eager=True or replace the
-        # Observations with explicit count aggregates.
         both = both.localCheckpoint(eager=True)
-        rows = both.orderBy("_sec", "merge_ix").collect()
+        rows = both.select(
+            "_sec", "_kept", "merge_ix", *[
+                c for c in ("name", "type", "description", "src", "tgt")
+                if c in both.columns
+            ]
+        ).orderBy("_sec", "merge_ix").collect()
         # (A local-relation rebuild of entities/relations from the
         # collected rows was A/B-tested here and measured SLOWER than
         # the filter-over-checkpoint views — the local relations lose
         # the checkpoint's stats and Arrow-free construction costs more
         # than the trivial filters; see OPTIMIZATION_r06.md.)
         if entities is not None:
-            entities = both.where(F.col("_sec") == "ent").select(*ent_cols)
+            entities = both.where(
+                (F.col("_sec") == "ent") & F.col("_kept")
+            ).select(*ent_cols)
+            found = [r for r in rows if r["_sec"] == "ent"]
+            n_entities_found = len(found)
             ctx.entities = [
                 {"entity": r["name"], "type": r["type"],
                  "description": r["description"]}
-                for r in rows if r["_sec"] == "ent"
+                for r in found if r["_kept"]
             ]
-            n_entities_found = int(ent_obs.get["n"])
         if relations is not None:
-            relations = both.where(F.col("_sec") == "rel").select(*rel_cols)
+            relations = both.where(
+                (F.col("_sec") == "rel") & F.col("_kept")
+            ).select(*rel_cols)
+            found = [r for r in rows if r["_sec"] == "rel"]
+            n_relations_found = len(found)
             ctx.relations = [
                 {"entity1": r["src"], "entity2": r["tgt"],
                  "description": r["description"]}
-                for r in rows if r["_sec"] == "rel"
+                for r in found if r["_kept"]
             ]
-            n_relations_found = int(rel_obs.get["n"])
 
     # ── Stage 3: chunk gathering + merge (Q9/Q10/Q11/Q13) ────────────
     chunk_branches: list[DataFrame] = []
@@ -521,49 +994,20 @@ def kg_query(
         branch_ix += 1
 
     merged_chunks = None
-    chunk_obs = None
     available_chunk_tokens = 0
     if chunk_branches:
         merged_ids = round_robin_merge(chunk_branches, ["chunk_id"])
-        chunk_obs = Observation("merged_chunks_count")
         merged_chunks = merged_ids.join(
             g.chunks.select("chunk_id", "content", "file_path"), "chunk_id"
-        ).observe(chunk_obs, F.count(F.lit(1)).alias("n"))
-        # ── Q14: dynamic chunk token budget (lightrag_search.py:761-823)
-        # available = max_total − tokens(system-prompt scaffold) −
-        # tokens(kg context ACTUALLY kept) − tokens(query) − 200 buffer,
-        # all through the shared tokenizer — the reference formula, not
-        # the configured-maxima estimate.
-        from ..operators.context_ops import build_rag_prompt
-
-        pre_kg_context = KG_QUERY_CONTEXT_TEMPLATE.format(
-            entities_str=_json_lines(
-                ctx.entities, ("entity", "type", "description")
-            ),
-            relations_str=_json_lines(
-                ctx.relations, ("entity1", "entity2", "description")
-            ),
-            text_chunks_str="",
-            reference_list_str="",
         )
-        pre_sys_prompt = build_rag_prompt(
-            "", params.response_type, params.user_prompt
-        )
-        available_chunk_tokens = max(
-            params.max_total_tokens
-            - count_tokens(pre_sys_prompt)
-            - count_tokens(pre_kg_context)
-            - count_tokens(query)
-            - 200,  # reference: reserved for reference list + safety
-            0,
-        )
+        available_chunk_tokens = _chunk_budget(ctx, query, params)
         merged_chunks = truncate_by_token_budget(
-            merged_chunks, "content", "merge_ix", available_chunk_tokens
+            merged_chunks, "content", "merge_ix", available_chunk_tokens,
+            flag_col="_kept",
         )
-        # ONE materialization of the gather/merge/truncate plan: the
-        # eager checkpoint publishes chunk_obs and both stage-4 reads
-        # (references, chunk rows) become trivial scans of the
-        # checkpointed result instead of re-executing the plan each.
+        # ONE materialization of the gather/merge/truncate plan: both
+        # stage-4 reads (references, chunk rows) become trivial scans of
+        # the checkpointed result instead of re-executing the plan each.
         merged_chunks = merged_chunks.localCheckpoint(eager=True)
 
     # ── Stage 4: context assembly (collect the small result) ─────────
@@ -579,7 +1023,8 @@ def kg_query(
         # path_properties broadcast join).
         from ..operators.context_ops import expand_file_references, reference_list
 
-        refs = expand_file_references(reference_list(merged_chunks))
+        kept = merged_chunks.where(F.col("_kept"))
+        refs = expand_file_references(reference_list(kept))
         if g.path_properties is not None:
             refs = refs.drop("last_modified").join(
                 g.path_properties.select("file_path", "last_modified"),
@@ -590,54 +1035,33 @@ def kg_query(
             F.lit("ref").alias("_sec"), F.col("ref_ix").alias("_ix"),
             "file_path", "last_modified",
             F.lit(None).cast("string").alias("chunk_id"),
-            F.lit(None).cast("string").alias("content"),
+            F.lit(None).cast("string").alias("content"), F.lit(True).alias("_kept"),
         )
+        # every merged chunk comes back (its count is processing_info's
+        # merged_chunks_count), the text only of the kept ones
         chunk_part = merged_chunks.select(
             F.lit("chunk").alias("_sec"), F.col("merge_ix").alias("_ix"),
             "file_path", F.lit(None).cast("timestamp").alias("last_modified"),
-            "chunk_id", "content",
+            "chunk_id", F.when(F.col("_kept"), F.col("content")).alias("content"),
+            "_kept",
         )
-        all_rows = ref_part.unionByName(chunk_part).orderBy("_sec", "_ix").collect()
-        ref_rows = [r for r in all_rows if r["_sec"] == "ref"]
-        chunk_rows = [r for r in all_rows if r["_sec"] == "chunk"]
-        ctx.references = [
-            {"reference_id": r["_ix"], "file_path": r["file_path"],
-             "last_modified": r["last_modified"]}
-            for r in ref_rows
-        ]
-        ref_by_path = {r["file_path"]: r["_ix"] for r in ref_rows}
-
-        def _ref_for(raw_path: str) -> int:
-            # a chunk's file_path may be a <SEP>-joined multi-file
-            # string; refs are keyed on the EXPANDED single paths (Q21),
-            # so cite the first (min ref_ix) matching expanded path —
-            # the reference's generate_reference_list_from_chunks
-            # behavior (lightrag_search.py:826-861)
-            hits = [
-                ref_by_path[p]
-                for p in (raw_path or "").split(GRAPH_FIELD_SEP)
-                if p in ref_by_path
-            ]
-            return min(hits) if hits else 0
-
-        ctx.chunks = [
-            {"reference_id": _ref_for(r["file_path"]),
-             "content": r["content"], "chunk_id": r["chunk_id"],
-             "file_path": r["file_path"]}
-            for r in chunk_rows
-        ]
-    ctx.processing_info = {
-        "total_entities_found": n_entities_found,
-        "total_relations_found": n_relations_found,
-        "entities_after_truncation": len(ctx.entities),
-        "relations_after_truncation": len(ctx.relations),
-        "merged_chunks_count": (
-            int(chunk_obs.get["n"]) if chunk_obs is not None else 0
-        ),
-        "final_chunks_count": len(ctx.chunks),
-        "available_chunk_tokens": available_chunk_tokens,
-    }
-    return ctx
+        # equal ref_ix (the paths of one <SEP>-joined file_path) order
+        # by path
+        all_rows = (
+            ref_part.unionByName(chunk_part)
+            .orderBy("_sec", "_ix", "file_path").collect()
+        )
+        refs = [(r["_ix"], r["file_path"], r["last_modified"])
+                for r in all_rows if r["_sec"] == "ref"]
+        merged = [r for r in all_rows if r["_sec"] == "chunk"]
+        chunk_rows = [(r["chunk_id"], r["content"], r["file_path"])
+                      for r in merged if r["_kept"]]
+    else:
+        refs = merged = chunk_rows = []
+    return _finish(
+        ctx, refs, chunk_rows, (n_entities_found, n_relations_found, len(merged)),
+        available_chunk_tokens,
+    )
 
 
 def answer_query(

@@ -12,6 +12,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from .functions.embedding import EMBEDDING_DIM
 
 #: the one driver/distributed crossover, in rows (see collect_if_small)
 DRIVER_MAX_ROWS = 200_000
@@ -25,26 +28,48 @@ DRIVER_MAX_ROWS = 200_000
 OBJ_AGG_FALLBACK_THRESHOLD = 1 << 20
 
 
-def collect_if_small(df: DataFrame, max_rows: int = DRIVER_MAX_ROWS):
+def collect_if_small(
+    df: DataFrame, max_rows: int = DRIVER_MAX_ROWS, vec_col: str | None = None
+):
     """The engine's one size policy: ``df`` as a pandas frame when it has
     at most ``max_rows`` rows, else ``None`` — one ``limit(max_rows + 1)``
     collect decides and fetches at once, with no separate count job.
+    The probe runs on one partition, so its limit needs no
+    single-partition exchange.
+
+    With ``vec_col``, a row weighs ceil(len(vec_col) / EMBEDDING_DIM)
+    rows (at least one), so the cap bounds the doubles that reach the
+    driver — ``max_rows × EMBEDDING_DIM`` (~100 MB at the default):
+    200k 64-d vectors, ~8.3k 1536-d ones.
 
     The graph and linking operators (components, betweenness, pagerank,
-    HITS, LPA, modularity refinement, canonical_map) and k-means each
-    pair an in-process numpy/Python twin with distributed rounds
-    (k-means weighs a point by its width, see operators/clustering).
-    Iterative rounds over a bounded input pay seconds of job and shuffle
-    scheduling for microseconds of work, so below the cap one collect
-    plus the twin wins; 200k rows of an edge or name projection is tens
-    of MB on the driver, while web-scale graphs stay distributed. KG
-    entity graphs and linking vocabularies grow with the vocabulary,
-    not the corpus, so they usually fit. Callers probe their raw input
-    projection before building any checkpointed or derived frame, so a
-    complete result IS the twin's input; each twin's distributed
-    sibling is called directly by tests and oracles."""
-    pdf = df.limit(max_rows + 1).toPandas()
-    return pdf if len(pdf) <= max_rows else None
+    HITS, LPA, modularity refinement, canonical_map), k-means and
+    ``kg_query`` each pair an in-process numpy/Python twin with
+    distributed rounds. Iterative rounds or multi-stage plans over a
+    bounded input pay seconds of job and shuffle scheduling for
+    milliseconds of work, so below the cap one collect plus the twin
+    wins; 200k rows of an edge or name projection is tens of MB on the
+    driver, while web-scale inputs stay distributed. KG entity graphs
+    and linking vocabularies grow with the vocabulary, not the corpus,
+    so they usually fit. Callers probe their raw input projection
+    before building any checkpointed or derived frame, so a complete
+    result IS the twin's input; each twin's distributed sibling is
+    called directly by tests and oracles."""
+    if vec_col is not None:
+        copies = F.greatest(F.lit(1), F.ceil(F.size(vec_col) / EMBEDDING_DIM))
+        # the first copy carries the row; the others only add weight
+        df = df.select(
+            F.explode(F.sequence(F.lit(1), copies)).alias("_copy"), "*"
+        ).select("_copy", *[
+            F.when(F.col("_copy") == 1, F.col(c)).alias(c) if c == vec_col else c
+            for c in df.columns
+        ])
+    pdf = df.coalesce(1).limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows:
+        return None
+    if vec_col is not None:
+        pdf = pdf[pdf["_copy"] == 1].drop(columns="_copy").reset_index(drop=True)
+    return pdf
 
 
 def _default_driver_mem() -> str:

@@ -17,6 +17,11 @@ jobs; this module adds the two streaming-shaped surfaces:
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -45,8 +50,6 @@ def run_incremental(
     n_batches = {"n": 0}
 
     def sink(batch: DataFrame, epoch_id: int) -> None:
-        import os
-
         status_path = f"{out_dir}/doc_status_stream"
         # in-batch dedup FIRST: the anti-join only sees PREVIOUS
         # batches, so a content-duplicate pair delivered in one batch
@@ -84,14 +87,18 @@ def run_incremental(
 _STREAM_DIRS: dict[str, str] = {}
 
 
+@atexit.register
+def _remove_stream_dirs() -> None:
+    for d in _STREAM_DIRS.values():
+        shutil.rmtree(d, ignore_errors=True)
+    _STREAM_DIRS.clear()
+
+
 def ensure_stream_dir(path: str) -> str:
     """The file-stream source requires a directory; expose a single
     parquet FILE through a symlink dir (local-path convenience — real
     deployments stream from a directory/table anyway). Memoized per
-    source file."""
-    import os
-    import tempfile
-
+    source file; the dirs are removed at interpreter exit."""
     if os.path.isfile(path):
         ap = os.path.abspath(path)
         d = _STREAM_DIRS.get(ap)
